@@ -903,7 +903,7 @@ def q29_bloom_seen(spark, sf_dir):
     urls = q02_url_normalize(spark, sf_dir)
     seen = urls.where(F.col("doc_id") % 3 == 0).select("url")
     bloom = build_bloom(seen, "url", expected=2048, fpp=0.05)
-    return anti_join_seen(urls, seen, "url", bloom=bloom).select("doc_id", "url")
+    return anti_join_seen(urls, seen, "url", prefilter=bloom).select("doc_id", "url")
 
 
 _Q29_SQL = f"SELECT doc_id, url FROM ({_Q02_SQL}) WHERE doc_id % 3 <> 0"
@@ -1514,7 +1514,8 @@ def q44_cuckoo_seen(spark, sf_dir):
     the operation a bloom cannot do); result must equal the exact anti-join
     against the post-expiry seen set.  The delete list is a driver-side
     sketch mutation (expiry API), not a data-plane collect."""
-    from eget_spark.operators.cuckoo import anti_join_seen_cuckoo, build_cuckoo
+    from eget_spark.operators.cuckoo import build_cuckoo
+    from eget_spark.operators.seen import anti_join_seen
 
     urls = q02_url_normalize(spark, sf_dir)
     seen = urls.where(F.col("doc_id") % 3 == 0).select("url")
@@ -1527,7 +1528,9 @@ def q44_cuckoo_seen(spark, sf_dir):
     seen_after = urls.where(
         (F.col("doc_id") % 3 == 0) & (F.col("doc_id") % 15 != 0)
     ).select("url")
-    return anti_join_seen_cuckoo(urls, seen_after, "url", cf).select("doc_id", "url")
+    return anti_join_seen(urls, seen_after, "url", prefilter=cf).select(
+        "doc_id", "url"
+    )
 
 
 _Q44_SQL = (

@@ -30,6 +30,11 @@ probe path — the per-round hot path — is fully vectorized).
 A rare eviction walk that exceeds the kick budget lands the entry in a
 per-shard stash (checked vectorized alongside the table), so membership
 never has false negatives even at high load factors.
+
+``ShardedCuckoo`` is a ``seen.SeenFilter``: its broadcast cache and probe
+column (``maybe_contains``) are the Bloom filter's, and the crawl's seen
+anti-join is ``seen.anti_join_seen(..., prefilter=cuckoo)`` — one
+prefilter-then-exact-confirm plan for both filters.
 """
 
 from __future__ import annotations
@@ -42,7 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .seen import BloomFilter, url_hash_exprs
+from .seen import BloomFilter, SeenFilter, url_hash_exprs
 from .seen import _as_u64 as _hash_u64
 
 _SLOTS = 4
@@ -158,15 +163,13 @@ class CuckooShard:
         return hit
 
 
-class ShardedCuckoo:
+class ShardedCuckoo(SeenFilter):
     """URL-sharded cuckoo filter family; the D1 seen-set with deletes."""
 
     def __init__(self, n_shards: int, n_buckets: int):
         self.n_shards = n_shards
         self.n_buckets = n_buckets
         self.shards = [CuckooShard(n_buckets) for _ in range(n_shards)]
-        self._bc = None
-        self._dirty = True
 
     def __getstate__(self):
         return (
@@ -178,8 +181,6 @@ class ShardedCuckoo:
     def __setstate__(self, state):
         self.n_shards, self.n_buckets, parts = state
         self.shards = [CuckooShard(self.n_buckets, t, st) for t, st in parts]
-        self._bc = None
-        self._dirty = True
 
     @classmethod
     def sized(cls, expected: int, n_shards: int = 32) -> "ShardedCuckoo":
@@ -215,18 +216,25 @@ class ShardedCuckoo:
         self._dirty = True
         return n
 
+    def contains_hashes(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
+        """Vectorized membership for pre-hashed members (uint64 arrays, h2
+        already odd) — the probe hot path, one numpy gather per shard."""
+        shard, bucket, fp = _route_hashes(h1, h2, self.n_shards, self.n_buckets)
+        hit = np.zeros(len(h1), dtype=bool)
+        for s in np.unique(shard).tolist():
+            m = shard == s
+            hit[m] = self.shards[s].contains_batch(bucket[m], fp[m])
+        return hit
+
     def contains_many(self, values) -> np.ndarray:
         out = np.zeros(len(values), dtype=bool)
         keep = [(i, v) for i, v in enumerate(values) if v is not None]
         if not keep:
             return out
         pos = np.fromiter((i for i, _ in keep), dtype=np.int64, count=len(keep))
-        shard, bucket, fp = self._route([v for _, v in keep])
-        hit = np.zeros(len(keep), dtype=bool)
-        for s in np.unique(shard).tolist():
-            m = shard == s
-            hit[m] = self.shards[s].contains_batch(bucket[m], fp[m])
-        out[pos] = hit
+        out[pos] = self.contains_hashes(
+            *BloomFilter._h12_arrays([v for _, v in keep])
+        )
         return out
 
     def contains(self, v: str) -> bool:
@@ -251,20 +259,6 @@ class ShardedCuckoo:
     def load_factor(self) -> float:
         filled = sum(int((s.table != 0).sum()) + len(s.stash) for s in self.shards)
         return filled / (self.n_shards * self.n_buckets * _SLOTS)
-
-    def spark_broadcast(self, spark):
-        """Cached broadcast of the whole family; re-broadcast on mutation
-        (same budget discipline as BloomFilter.spark_broadcast)."""
-        if self._bc is not None and not self._dirty:
-            return self._bc
-        if self._bc is not None:
-            try:
-                self._bc.unpersist()
-            except Exception:
-                pass
-        self._bc = spark.sparkContext.broadcast(self.__getstate__())
-        self._dirty = False
-        return self._bc
 
 
 def build_cuckoo(
@@ -351,55 +345,6 @@ def build_cuckoo(
         ).copy()
         sh.stash = list(zip(r["stash_i"], r["stash_fp"]))
     return out
-
-
-def cuckoo_maybe_contains(spark, cf: ShardedCuckoo, url):
-    """Column predicate: True iff the filter *may* contain url.  Hashing
-    is JVM-side (url_hash_exprs); the UDF receives int64 pairs and probes
-    with pure numpy gathers."""
-    bc = cf.spark_broadcast(spark)
-
-    @F.pandas_udf(T.BooleanType())
-    def probe(h1s: pd.Series, h2s: pd.Series) -> pd.Series:
-        flt = ShardedCuckoo.__new__(ShardedCuckoo)
-        flt.__setstate__(bc.value)
-        h1 = _hash_u64(h1s)
-        h2 = _hash_u64(h2s) | np.uint64(1)
-        shard, bucket, fp = _route_hashes(h1, h2, flt.n_shards, flt.n_buckets)
-        hit = np.zeros(len(h1), dtype=bool)
-        for s in np.unique(shard).tolist():
-            m = shard == s
-            hit[m] = flt.shards[s].contains_batch(bucket[m], fp[m])
-        return pd.Series(hit)
-
-    c = F.col(url) if isinstance(url, str) else url
-    h1e, h2e = url_hash_exprs(c)
-    # null url -> False, symmetric with build_cuckoo's isNotNull gate
-    return F.when(c.isNull(), F.lit(False)).otherwise(probe(h1e, h2e))
-
-
-def anti_join_seen_cuckoo(
-    candidates: DataFrame,
-    seen: DataFrame,
-    url_col: str = "url",
-    cuckoo: ShardedCuckoo | None = None,
-) -> DataFrame:
-    """J4/D1 with a cuckoo prefilter: definite-negatives bypass the join;
-    positives (seen + false positives) are confirmed exactly — identical
-    contract to seen.anti_join_seen."""
-    if cuckoo is None:
-        return candidates.join(seen, url_col, "left_anti")
-    spark = candidates.sparkSession
-    # checkpoint: flagged feeds three consumers (cf. seen.anti_join_seen)
-    flagged = candidates.withColumn(
-        "_maybe_seen", cuckoo_maybe_contains(spark, cuckoo, F.col(url_col))
-    ).localCheckpoint(eager=False)
-    definite_new = flagged.where(~F.col("_maybe_seen")).drop("_maybe_seen")
-    positives = flagged.where(F.col("_maybe_seen")).drop("_maybe_seen")
-    found = seen.join(F.broadcast(positives.select(url_col)), url_col, "left_semi")
-    return definite_new.unionByName(
-        positives.join(F.broadcast(found), url_col, "left_anti")
-    )
 
 
 def expire_from_filter(cf: ShardedCuckoo, df: DataFrame, url_col: str = "url") -> int:

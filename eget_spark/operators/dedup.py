@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import shingles
+from ..session import scoped_conf
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -297,28 +298,23 @@ def _inverted_index_pairs(
     # exempt width), the distinct reuses its clustering, the stats/
     # sizes aggregates reduce to O(1)/O(docs) rows — yet AQE split each
     # into materialize + re-optimize sub-jobs (distinct+stats ran as 4
-    # jobs where 2 suffice).  AQE is restored before the shuffled
-    # fallback join below, where skew-join splitting matters at scale.
+    # jobs where 2 suffice).  The kernel path keeps AQE off through its
+    # final checkpoint; the shuffled fallback join below runs with the
+    # session's AQE, where skew-join splitting matters at scale.
     spark = df.sparkSession
-    _aqe_key = "spark.sql.adaptive.enabled"
-    _aqe_old = spark.conf.get(_aqe_key, "true")
-    spark.conf.set(_aqe_key, "false")
+    aqe_off = {"spark.sql.adaptive.enabled": "false"}
     id_numeric = dict(df.dtypes).get(id_col, "") in (
         "tinyint", "smallint", "int", "bigint"
     )
-
-    def _restore_aqe():
-        spark.conf.set(_aqe_key, _aqe_old)
-
-    # ONE stats job: pack bounds for the Arrow kernel AND an exact
-    # injectivity guard for the hashed join key.  Probing the self-join
-    # on xxhash64(s) (a long) instead of the shingle string halved the
-    # enumeration stage at sf1.0 (guide §2.3 narrower types — the match
-    # predicate only needs equality, not the bytes); it is only correct
-    # when no two distinct shingles collide, so countDistinct(s) ==
-    # countDistinct(xxhash64(s)) is verified on the driver and any
-    # collision (p ~ n^2/2^65) falls back to the exact string join.
-    try:
+    with scoped_conf(spark, aqe_off):
+        # ONE stats job: pack bounds for the Arrow kernel AND an exact
+        # injectivity guard for the hashed join key.  Probing the self-join
+        # on xxhash64(s) (a long) instead of the shingle string halved the
+        # enumeration stage at sf1.0 (guide §2.3 narrower types — the match
+        # predicate only needs equality, not the bytes); it is only correct
+        # when no two distinct shingles collide, so countDistinct(s) ==
+        # countDistinct(xxhash64(s)) is verified on the driver and any
+        # collision (p ~ n^2/2^65) falls back to the exact string join.
         if id_numeric:
             st = sh.agg(
                 F.count("*").alias("n"),
@@ -341,42 +337,42 @@ def _inverted_index_pairs(
             n_index = st["n"]
             pack_ok = False
             hash_ok = st["ds"] == st["dh"]
-    except Exception:
-        _restore_aqe()
-        raise
-    sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
-    hx = None
-    bc_index = None
-    do_broadcast = n_index <= broadcast_index_rows
-    if hash_ok:
-        # persist the hashed projection: probing the broadcast hash from a
-        # cached LONG column measured ~2x faster than re-projecting the
-        # cached string index inside the join stage
-        hx = sh.select("id", F.xxhash64("s").alias("s")).persist()
-        probe = hx
-    else:
-        probe = sh
-    if pack_ok and do_broadcast and hash_ok:
-        # Round-6 numpy-probe kernel (guide §4.2): the JVM broadcast join
-        # enumerated the O(sum df^2) candidate stream (259M rows at
-        # sf1-scale, ~161 s CPU in one 7.6 s stage) and shipped 129.5M
-        # packed rows through Arrow into the counting kernel.  Instead,
-        # the (id, hash) index — already bounded by
-        # ``broadcast_index_rows``, the exact same gate that bounded the
-        # JVM broadcast build — is collected once, sorted by hash, and
-        # broadcast as two numpy arrays; the kernel maps over the
-        # id-clustered index partitions themselves (2.65M rows total,
-        # not 129.5M) and enumerates matches with vectorized
-        # searchsorted + range expansion.  The id-clustering invariant
-        # is unchanged, so per-task np.unique still IS the exact global
-        # per-pair count; above the broadcast bound the shuffled JVM
-        # join below remains the 100-TB path.
-        import numpy as np
+        sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
+        hx = None
+        bc_index = None
+        do_broadcast = n_index <= broadcast_index_rows
+        if hash_ok:
+            # persist the hashed projection: probing the broadcast hash from a
+            # cached LONG column measured ~2x faster than re-projecting the
+            # cached string index inside the join stage
+            hx = sh.select("id", F.xxhash64("s").alias("s")).persist()
+            probe = hx
+        else:
+            probe = sh
+        kernel = pack_ok and do_broadcast and hash_ok
+        if kernel:
+            # Round-6 numpy-probe kernel (guide §4.2): the JVM broadcast join
+            # enumerated the O(sum df^2) candidate stream (259M rows at
+            # sf1-scale, ~161 s CPU in one 7.6 s stage) and shipped 129.5M
+            # packed rows through Arrow into the counting kernel.  Instead,
+            # the (id, hash) index — already bounded by
+            # ``broadcast_index_rows``, the exact same gate that bounded the
+            # JVM broadcast build — is collected once, sorted by hash, and
+            # broadcast as two numpy arrays; the kernel maps over the
+            # id-clustered index partitions themselves (2.65M rows total,
+            # not 129.5M) and enumerates matches with vectorized
+            # searchsorted + range expansion.  The id-clustering invariant
+            # is unchanged, so per-task np.unique still IS the exact global
+            # per-pair count; above the broadcast bound the shuffled JVM
+            # join below remains the 100-TB path.
+            import numpy as np
 
-        try:
             tbl = hx.toArrow()  # zero-copy into numpy (no pandas detour)
             h_np = tbl.column("s").to_numpy()
-            i_np = tbl.column("id").to_numpy()
+            # int64 whatever the id column's width: the kernel emits these
+            # ids into "id_b long" (an int id column would otherwise ship
+            # an int32 vector that the JVM reads with getLong)
+            i_np = tbl.column("id").to_numpy().astype(np.int64, copy=False)
             order = np.argsort(h_np)
             # per-doc index sizes (sorted-id lookup table, robust to
             # sparse id spaces), computed once here instead of per task
@@ -388,9 +384,7 @@ def _inverted_index_pairs(
                 (h_np[order], i_np[order], uid, un)
             )
             del tbl, h_np, i_np, order, sid, edge, uid, un
-        except Exception:
-            _restore_aqe()
-            raise
+    if kernel:
         prefilter = np_prefilter
 
         def _probe_kernel(it):
@@ -467,9 +461,8 @@ def _inverted_index_pairs(
             _probe_kernel, "id_a long, id_b long, inter long"
         )
     else:
-        # shuffled/JVM fallback: restore AQE — at scale its skew-join
-        # split is what saves a hot-shingle self-join
-        _restore_aqe()
+        # shuffled/JVM fallback: the session's AQE is back — at scale its
+        # skew-join split is what saves a hot-shingle self-join
         bside = probe.alias("b")
         if do_broadcast:
             bside = F.broadcast(bside)
@@ -500,19 +493,13 @@ def _inverted_index_pairs(
     )
     # the candidate stream is ONE packed int64 per row: the default 10k-row
     # Arrow batches cost ~13k per-batch round-trips at sf1.0 (measured
-    # 8.0s -> 5.3s with 1M-row batches); restore the session value after
-    # the eager materialization (guide §4.2 batch sizing)
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old_batch = spark.conf.get(key, None)
-    try:
-        spark.conf.set(key, str(1 << 20))
+    # 8.0s -> 5.3s with 1M-row batches) (guide §4.2 batch sizing); the
+    # kernel path's eager materialization still runs AQE-off
+    final_conf = {"spark.sql.execution.arrow.maxRecordsPerBatch": str(1 << 20)}
+    if kernel:
+        final_conf.update(aqe_off)
+    with scoped_conf(spark, final_conf):
         out = finish(inter).localCheckpoint(eager=True)
-    finally:
-        _restore_aqe()  # idempotent; covers the kernel path end to end
-        if old_batch is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old_batch)
     sh.unpersist()
     if hx is not None:
         hx.unpersist()

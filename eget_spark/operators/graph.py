@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import scoped_conf
+
 
 def out_degrees(edges: DataFrame) -> DataFrame:
     """(src, out_deg) — parallel edges count individually."""
@@ -352,20 +354,17 @@ def opic_fixed(
     # on: celebrity-page reduce skew is real at web scale and the
     # skew-join split is exactly what handles it.
     spark = nodes.sparkSession
-    _aqe_key = "spark.sql.adaptive.enabled"
-    _sp_key = "spark.sql.shuffle.partitions"
-    _aqe_old = spark.conf.get(_aqe_key, "true")
-    _sp_old = spark.conf.get(_sp_key, "32")
-    small = n <= 1_000_000
-    try:
-        if small:
-            spark.conf.set(_aqe_key, "false")
-            # static stand-in for the coalescing AQE would have done:
-            # derive the loop's exchange width from the KNOWN node count
-            # (~64k state rows per partition), not a local-mode constant
-            spark.conf.set(
-                _sp_key, str(min(int(_sp_old), n // (1 << 16) + 1))
-            )
+    small_conf = {}
+    if n <= 1_000_000:
+        # static stand-in for the coalescing AQE would have done: derive
+        # the loop's exchange width from the KNOWN node count (~64k state
+        # rows per partition), not a local-mode constant
+        sp = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        small_conf = {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.shuffle.partitions": str(min(sp, n // (1 << 16) + 1)),
+        }
+    with scoped_conf(spark, small_conf):
         deg = out_degrees(edges).localCheckpoint()  # computed once, reused per iter
         state = nodes.select(
             "id",
@@ -398,10 +397,6 @@ def opic_fixed(
                 )
                 .localCheckpoint()
             )
-    finally:
-        if small:
-            spark.conf.set(_aqe_key, _aqe_old)
-            spark.conf.set(_sp_key, _sp_old)
     return state.select(
         "id",
         "cash_fp",

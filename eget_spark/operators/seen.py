@@ -9,6 +9,12 @@ reduce), broadcast it, and use it to pre-filter candidates; survivors (bloom
 never drop a URL.  Bloom-negative candidates — the overwhelming majority in
 steady state — skip the join entirely.
 
+``anti_join_seen`` is the one seen anti-join for every prefilter: any
+``SeenFilter`` — this module's ``BloomFilter`` or the deletable
+``cuckoo.ShardedCuckoo`` — supplies its probe column through
+``maybe_contains``, and the prefilter-then-exact-confirm plan is the same
+for both (a filter only ever says "maybe seen"; the confirm is exact).
+
 The filter is deterministic (xxhash64 double hashing), picklable, and
 mergeable, so per-round deltas can be built *distributed* (``build_bloom``
 with ``like=`` the running filter) and OR-ed in — only 4 MiB bit chunks
@@ -140,7 +146,58 @@ def _as_u64(col: "pd.Series | np.ndarray") -> np.ndarray:
     return np.asarray(col, dtype=np.int64).view(_U64)
 
 
-class BloomFilter:
+class SeenFilter:
+    """A mergeable, picklable URL-seen prefilter keyed on
+    ``(xxhash64(url), xxhash64(url, 1))``: ``BloomFilter`` here and
+    ``cuckoo.ShardedCuckoo``.  A filter answers "maybe seen" with false
+    positives only, so ``anti_join_seen`` confirms its positives exactly.
+
+    A subclass sets ``_dirty`` on every mutation, pickles its whole state
+    through ``__getstate__`` / ``__setstate__``, and answers
+    ``contains_hashes(h1, h2)`` over uint64 arrays with h2 odd-forced."""
+
+    _bc = None  # cached SparkContext broadcast of the state — driver only
+    _dirty = True  # state changed since that broadcast
+
+    def spark_broadcast(self, spark):
+        """Broadcast the filter's state; reused until the filter mutates."""
+        if self._bc is not None and not self._dirty:
+            return self._bc
+        if self._bc is not None:
+            try:
+                self._bc.unpersist()
+            except Exception:
+                pass
+        self._bc = spark.sparkContext.broadcast(self.__getstate__())
+        self._dirty = False
+        return self._bc
+
+    def maybe_contains(self, spark, url) -> Column:
+        """Column predicate: True iff the filter *may* contain url.
+
+        The UDF closes over the filter's cached broadcast (one broadcast
+        per mutation, not per call), never the driver object.  Hashing
+        happens JVM-side (url_hash_exprs); the UDF receives int64 pairs
+        and does pure numpy gathers — no per-row Python in the probe
+        path."""
+        bc = self.spark_broadcast(spark)
+        cls = type(self)
+
+        @F.pandas_udf(T.BooleanType())
+        def probe(h1: pd.Series, h2: pd.Series) -> pd.Series:
+            flt = cls.__new__(cls)
+            flt.__setstate__(bc.value)
+            return pd.Series(flt.contains_hashes(_as_u64(h1), _as_u64(h2) | _U64(1)))
+
+        c = F.col(url) if isinstance(url, str) else url
+        h1e, h2e = url_hash_exprs(c)
+        # null url -> False (never "maybe seen"): xxhash64(NULL) is the
+        # seed sentinel, which the distributed builds exclude — keep the
+        # probe symmetric
+        return F.when(c.isNull(), F.lit(False)).otherwise(probe(h1e, h2e))
+
+
+class BloomFilter(SeenFilter):
     """Plain mergeable Bloom filter over UTF-8 strings.
 
     Double hashing: (xxhash64(url), xxhash64(url, 1)) yields h1, h2;
@@ -152,16 +209,12 @@ class BloomFilter:
         self.m_bits = m_bits
         self.k = k
         self.bits = bits if bits is not None else np.zeros((m_bits + 7) // 8, dtype=np.uint8)
-        self._bc = None  # cached (SparkContext broadcast, id) — driver only
-        self._dirty = True
 
     def __getstate__(self):
         return (self.m_bits, self.k, self.bits)
 
     def __setstate__(self, state):
         self.m_bits, self.k, self.bits = state
-        self._bc = None
-        self._dirty = True
 
     def saturated(self, total: int) -> bool:
         """True once ``total`` members exceed the sizing this filter can
@@ -252,21 +305,6 @@ class BloomFilter:
     def contains(self, v: str) -> bool:
         return bool(self.contains_many([v])[0])
 
-    # --- broadcast cache -----------------------------------------------------
-
-    def spark_broadcast(self, spark):
-        """Broadcast (m, k, bits); reused until the filter mutates."""
-        if self._bc is not None and not self._dirty:
-            return self._bc
-        if self._bc is not None:
-            try:
-                self._bc.unpersist()
-            except Exception:
-                pass
-        self._bc = spark.sparkContext.broadcast((self.m_bits, self.k, self.bits))
-        self._dirty = False
-        return self._bc
-
 
 _CHUNK_BYTES = 1 << 22  # 4 MiB merge chunks
 
@@ -342,41 +380,20 @@ def build_bloom(
     return out
 
 
-def bloom_maybe_contains(spark, bloom: BloomFilter, url):
-    """Column predicate: True iff the bloom *may* contain url.
-
-    The UDF closes over the filter's cached broadcast (one broadcast per
-    mutation, not per call), never the driver object.  Hashing happens
-    JVM-side (url_hash_exprs); the UDF receives int64 pairs and does pure
-    numpy gathers — no per-row Python in the probe path."""
-    bc = bloom.spark_broadcast(spark)
-
-    @F.pandas_udf(T.BooleanType())
-    def probe(h1: pd.Series, h2: pd.Series) -> pd.Series:
-        m, k, bits = bc.value
-        bf = BloomFilter(m, k, bits)
-        return pd.Series(bf.contains_hashes(_as_u64(h1), _as_u64(h2) | _U64(1)))
-
-    c = F.col(url) if isinstance(url, str) else url
-    h1e, h2e = url_hash_exprs(c)
-    # null url -> False (never "maybe seen"): xxhash64(NULL) is the seed
-    # sentinel, which build_bloom now excludes — keep probe symmetric
-    return F.when(c.isNull(), F.lit(False)).otherwise(probe(h1e, h2e))
-
-
 def anti_join_seen(
     candidates: DataFrame,
     seen: DataFrame,
     url_col: str = "url",
-    bloom: BloomFilter | None = None,
+    prefilter: SeenFilter | None = None,
 ) -> DataFrame:
     """J4/D1: candidates not yet seen.
 
-    With a bloom: definite-negatives bypass the shuffle join; only bloom
-    positives (seen URLs + false positives) are confirmed by the exact
+    With a prefilter (a ``BloomFilter`` or a ``cuckoo.ShardedCuckoo``):
+    definite-negatives bypass the shuffle join; only "maybe seen"
+    candidates (seen URLs + false positives) are confirmed by the exact
     anti join, then unioned back.
     """
-    if bloom is None:
+    if prefilter is None:
         return candidates.join(seen, url_col, "left_anti")
     spark = candidates.sparkSession
     # checkpoint the flagged frame: it feeds THREE consumers (the
@@ -385,7 +402,7 @@ def anti_join_seen(
     # (fetch join, harvest, normalize, filters, probe) executes three
     # times per round; measured ~8 s/round at the 350k-page bench
     flagged = candidates.withColumn(
-        "_maybe_seen", bloom_maybe_contains(spark, bloom, F.col(url_col))
+        "_maybe_seen", prefilter.maybe_contains(spark, F.col(url_col))
     ).localCheckpoint(eager=False)
     definite_new = flagged.where(~F.col("_maybe_seen")).drop("_maybe_seen")
     positives = flagged.where(F.col("_maybe_seen")).drop("_maybe_seen")

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import scoped_conf
+
 
 @dataclass
 class SeqResult:
@@ -61,6 +63,16 @@ class SeqResult:
 # the plan from the input size, not a constant): ABOVE the threshold the
 # range-partitioned path is unchanged and remains the 100-TB story.
 SEQ_SMALL_ROWS = 1 << 20
+
+_AQE_OFF = {"spark.sql.adaptive.enabled": "false"}
+
+
+def _group_counts(parts: DataFrame, group_col: str) -> dict:
+    """{group key: row count} — one row per partition or bucket."""
+    return {
+        r[group_col]: r["cnt"]
+        for r in parts.groupBy(group_col).agg(F.count("*").alias("cnt")).collect()
+    }
 
 
 def with_global_seq(
@@ -100,22 +112,22 @@ def with_global_seq(
     if small_threshold is None:
         small_threshold = SEQ_SMALL_ROWS
 
-    _aqe_key = "spark.sql.adaptive.enabled"
-    _aqe_old = spark.conf.get(_aqe_key, "true")
     if bucket_expr is not None:
-        # the bucket branch runs entirely under AQE-off (restored after
-        # the counts collect below): the cached plan compiles at
-        # materialization time, and an AQE plan runs as a chain of 3-4
-        # serial sub-jobs of driver round-trip latency per call — this is
-        # the crawl loop's per-round hot path, and the bucket exchange's
-        # partitioning is already derived from the caller's input size
-        spark.conf.set(_aqe_key, "false")
-        parts = (
-            df.withColumn("_bkt", bucket_expr.cast("long"))
-            .repartition(num_partitions, F.col("_bkt"))
-            .persist()
-        )
+        # the bucket branch runs entirely under AQE-off, through the
+        # counts collect below: the cached plan takes the session's AQE
+        # setting when persist() registers it, and an AQE plan runs as a
+        # chain of 3-4 serial sub-jobs of driver round-trip latency per
+        # call — this is the crawl loop's per-round hot path, and the
+        # bucket exchange's partitioning is already derived from the
+        # caller's input size
         group_col = "_bkt"
+        with scoped_conf(spark, _AQE_OFF):
+            parts = (
+                df.withColumn("_bkt", bucket_expr.cast("long"))
+                .repartition(num_partitions, F.col("_bkt"))
+                .persist()
+            )
+            counts = _group_counts(parts, group_col)
     else:
         src = df.persist()
         n_in = src.count()
@@ -139,22 +151,14 @@ def with_global_seq(
             .persist()
         )
         group_col = "_pid"
-    # AQE splits this one counts job into ~6 serial sub-jobs (materialize,
-    # shuffle-read, re-optimize, final agg) — pure driver round-trip
-    # latency on a per-round hot path (measured ~0.4-0.6 s/crawl round).
-    # The aggregate is a partial-combined count over the cached partitions
-    # with a bounded-cardinality key; AQE has nothing to optimize here, so
-    # run just this collect with it off (restored immediately).
-    try:
-        spark.conf.set(_aqe_key, "false")
-        counts = {
-            r[group_col]: r["cnt"]
-            for r in parts.groupBy(group_col)
-            .agg(F.count("*").alias("cnt"))
-            .collect()
-        }
-    finally:
-        spark.conf.set(_aqe_key, _aqe_old)
+        # AQE splits this one counts job into ~6 serial sub-jobs
+        # (materialize, shuffle-read, re-optimize, final agg) — pure driver
+        # round-trip latency on a per-round hot path (measured ~0.4-0.6
+        # s/crawl round).  The aggregate is a partial-combined count over
+        # the cached partitions with a bounded-cardinality key; AQE has
+        # nothing to optimize here, so run just this collect with it off
+        with scoped_conf(spark, _AQE_OFF):
+            counts = _group_counts(parts, group_col)
     total = sum(counts.values())
     offsets = []
     acc = start

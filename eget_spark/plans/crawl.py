@@ -50,7 +50,7 @@ from ..functions.urls import (
     normalize_absolute_expr,
     normalize_url,
 )
-from ..operators.cuckoo import ShardedCuckoo, anti_join_seen_cuckoo, build_cuckoo
+from ..operators.cuckoo import ShardedCuckoo, build_cuckoo
 from ..operators.links import matches_any, robots_allowed, should_include
 from ..operators.politeness import schedule_round
 from ..operators.seen import BloomFilter, anti_join_seen, build_bloom
@@ -213,6 +213,22 @@ def apply_host_cap(
         .withColumn("_hrk", F.row_number().over(w_h))
         .where(F.coalesce(F.col("_n"), F.lit(0)) + F.col("_hrk") <= cap)
         .drop("_khost", "_n", "_hrk")
+    )
+
+
+def _count_by(rows: DataFrame, keys: list[str]) -> DataFrame:
+    """(keys..., _n) histogram of ``rows``."""
+    return rows.groupBy(*keys).agg(F.count("*").cast("long").alias("_n"))
+
+
+def _add_counts(counts: DataFrame, rows: DataFrame, keys: list[str]) -> DataFrame:
+    """Fold this round's admitted ``rows`` into a (keys..., _n) histogram:
+    union, re-aggregate so the histogram keeps ONE row per key, and
+    checkpoint so its lineage stays one round deep."""
+    return _checkpoint(
+        counts.unionByName(_count_by(rows, keys))
+        .groupBy(*keys)
+        .agg(F.sum("_n").cast("long").alias("_n"))
     )
 
 
@@ -434,9 +450,7 @@ def crawl(
     host_counts: DataFrame | None = None
     if config.max_pages_per_host is not None:
         hc_src = frontier if state is None else run.admitted.read_upto(round_no)
-        host_counts = _checkpoint(
-            hc_src.groupBy("host").agg(F.count("*").cast("long").alias("_n"))
-        )
+        host_counts = _checkpoint(_count_by(hc_src, ["host"]))
 
     # spider-trap throttle state: running (host, template, _n) histogram of
     # admitted URLs (rebuilt from admitted history on resume); trap hosts
@@ -452,9 +466,10 @@ def crawl(
         # identically
         tc_src = frontier if state is None else run.admitted.read_upto(round_no)
         tmpl_counts = _checkpoint(
-            tc_src.select("host", url_template(F.col("url")).alias("template"))
-            .groupBy("host", "template")
-            .agg(F.count("*").cast("long").alias("_n"))
+            _count_by(
+                tc_src.select("host", url_template(F.col("url")).alias("template")),
+                ["host", "template"],
+            )
         )
 
     def seen_df() -> DataFrame:
@@ -746,10 +761,7 @@ def crawl(
             )
 
             # J4/D1: not yet seen
-            if isinstance(bloom, ShardedCuckoo):
-                kids = anti_join_seen_cuckoo(kids, seen_df(), "url", bloom)
-            else:
-                kids = anti_join_seen(kids, seen_df(), "url", bloom=bloom)
+            kids = anti_join_seen(kids, seen_df(), "url", prefilter=bloom)
 
             # automatic spider-trap exclusion: candidates of flagged hosts
             # drop via a broadcast anti-join BEFORE sequencing (same shape
@@ -757,17 +769,8 @@ def crawl(
             # that feeds the flag is map-side regexp_replace over the
             # admitted history, never this round's candidate set
             if tmpl_counts is not None:
-                trap_hosts = (
-                    tmpl_counts.groupBy("host")
-                    .agg(F.sum("_n").alias("_tot"), F.max("_n").alias("_top"))
-                    .where(
-                        (F.col("_tot") >= config.auto_trap_min_urls)
-                        & (
-                            F.col("_top")
-                            >= F.lit(config.auto_trap_threshold) * F.col("_tot")
-                        )
-                    )
-                    .select(F.col("host").alias("_thost"))
+                trap_hosts = _trap_hosts(tmpl_counts, config).select(
+                    F.col("host").alias("_thost")
                 )
                 kids = (
                     kids.withColumn("_thost", host_of(F.col("url")))
@@ -842,26 +845,12 @@ def crawl(
             if len(seen_parts) > config.seen_compact_parts:
                 seen_parts = [_checkpoint(_union_all(seen_parts))]
         if config.max_pages_per_host is not None and n_admitted > 0:
-            host_counts = _checkpoint(
-                host_counts.unionByName(
-                    admitted.groupBy("host").agg(F.count("*").cast("long").alias("_n"))
-                )
-                .groupBy("host")
-                .agg(F.sum("_n").cast("long").alias("_n"))
-            )
+            host_counts = _add_counts(host_counts, admitted, ["host"])
         if tmpl_counts is not None and n_admitted > 0:
-            # re-aggregate so the trap aggregate always sees ONE row per
-            # (host, template) — same compaction discipline as host_counts
-            tmpl_counts = _checkpoint(
-                tmpl_counts.unionByName(
-                    admitted.select(
-                        "host", url_template(F.col("url")).alias("template")
-                    )
-                    .groupBy("host", "template")
-                    .agg(F.count("*").cast("long").alias("_n"))
-                )
-                .groupBy("host", "template")
-                .agg(F.sum("_n").cast("long").alias("_n"))
+            tmpl_counts = _add_counts(
+                tmpl_counts,
+                admitted.select("host", url_template(F.col("url")).alias("template")),
+                ["host", "template"],
             )
         if bloom is None and want_bloom(admitted_total):
             bloom = build_filter(seen_df(), bloom_expected(admitted_total))

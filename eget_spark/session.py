@@ -1,4 +1,5 @@
-"""SparkSession construction tuned for the engine.
+"""SparkSession construction tuned for the engine, and ``scoped_conf``,
+the one place the engine changes a running session's conf.
 
 Local-mode defaults mirror what a cluster submit would set via spark-submit
 conf; the engine code itself never assumes local mode.
@@ -8,6 +9,8 @@ from __future__ import annotations
 
 import os
 import tempfile
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -100,3 +103,31 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, settings: dict[str, str]) -> Iterator[None]:
+    """Apply ``settings`` to ``spark``'s session conf for the body.
+
+    Each key's prior value, or its absence, is recorded first and put back
+    in ``finally`` (an absent key is unset again), so a raising body leaks
+    nothing and a nested scope restores the outer scope's values.
+
+    A setting acts when an action plans (for ``persist``, when the cache
+    entry is registered), not when a DataFrame is built, so that action
+    must run inside the scope.  Contract: one session driven by one
+    thread; threads scoping the same key of a shared session would
+    restore each other's values.
+    """
+    conf = spark.conf
+    prior = {key: conf.get(key, None) for key in settings}
+    try:
+        for key, value in settings.items():
+            conf.set(key, value)
+        yield
+    finally:
+        for key, value in prior.items():
+            if value is None:
+                conf.unset(key)
+            else:
+                conf.set(key, value)

@@ -51,7 +51,7 @@ import re
 import zlib
 
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b(.*?)endobj", re.S)
-_STREAM_RE = re.compile(rb"stream\r?\n(.*?)\r?\n?endstream", re.S)
+_STREAM_RE = re.compile(rb"stream\r?\n")
 _REF_RE = re.compile(rb"(\d+)\s+\d+\s+R")
 
 _ESCAPES = {
@@ -293,11 +293,37 @@ def _apply_filters(dict_part: bytes, raw: bytes) -> bytes:
     return raw
 
 
+def _stream_end(data: bytes, k: int, dict_part: bytes) -> int:
+    """End (exclusive) of the stream bytes that start at ``k``: ``k +
+    /Length`` when a direct /Length lands on ``endstream``, else the
+    ``endstream`` keyword less the one end-of-line marker before it, in
+    the writer's own convention (the EOL after the ``stream`` keyword) —
+    so a data byte ``\\r`` before an LF is data, not half a CRLF.  A
+    lone CR EOL is kept: Flate ignores trailing bytes, content streams
+    read it as whitespace.  -1 when there is no ``endstream``."""
+    ln = _int_value(dict_part, b"/Length")
+    if ln is not None and data[k + ln : k + ln + 16].lstrip().startswith(
+        b"endstream"
+    ):
+        return k + ln
+    end = data.find(b"endstream", k)
+    if end < 0:
+        return -1
+    eol = b"\r\n" if data[k - 2 : k] == b"\r\n" else b"\n"
+    if end - len(eol) >= k and data[end - len(eol) : end] == eol:
+        return end - len(eol)
+    return end
+
+
 def _stream_data(body: bytes) -> bytes:
     m = _STREAM_RE.search(body)
     if not m:
         return b""
-    return _apply_filters(_dict_part(body), m.group(1))
+    dict_part = _dict_part(body)
+    end = _stream_end(body, m.end(), dict_part)
+    if end < 0:
+        return b""
+    return _apply_filters(dict_part, body[m.end() : end])
 
 
 # --- xref-driven object location (PDF 1.5+ support) ---------------------------
@@ -354,15 +380,9 @@ def _obj_at(data: bytes, off: int) -> tuple[int, bytes] | None:
             k += 2
         elif data[k : k + 1] == b"\n":
             k += 1
-        ln = _int_value(data[i:dict_end], b"/Length")
-        if ln is not None and data[k + ln : k + ln + 16].lstrip().startswith(
-            b"endstream"
-        ):
-            send = k + ln
-        else:  # indirect or wrong /Length: byte search (documented)
-            send = data.find(b"endstream", k)
-            if send < 0:
-                return None
+        send = _stream_end(data, k, data[i:dict_end])
+        if send < 0:
+            return None
         end = data.find(b"endobj", send)
     else:
         end = data.find(b"endobj", dict_end)

@@ -227,3 +227,33 @@ def test_pptx_extra_title_paragraph_demotes():
         ("paragraph", "Subtitle line"),
         ("paragraph", "p"),
     ]
+
+
+def test_pdf_flate_stream_ending_in_cr_keeps_that_byte():
+    """A Flate stream whose compressed bytes end in ``\\r`` decodes: the
+    stream extent comes from its direct /Length, and without a usable
+    /Length only the end-of-line marker before ``endstream`` is trimmed —
+    never a trailing ``\\r`` of the data itself."""
+    import hashlib
+    import re
+    import zlib
+
+    from eget_spark.sources.pdfmini import build_pdf_bytes, decode_pdf_bytes
+
+    def flate_ends_in_cr(text):
+        data = build_pdf_bytes([text])
+        raw = re.search(rb"/FlateDecode /Length (\d+) >>\nstream\n", data)
+        body = data[raw.end() : raw.end() + int(raw.group(1))]
+        return data, body.endswith(b"\r") and zlib.decompress(body)
+
+    # the last compressed byte is adler32's low byte: vary the text's
+    # byte sum widely until it is 0x0d
+    texts = (f"Page text {hashlib.md5(str(i).encode()).hexdigest()}" for i in range(5000))
+    data = next(d for d, ok in map(flate_ends_in_cr, texts) if ok)
+    text = decode_pdf_bytes(data)
+    assert len(text) == 1 and text[0].startswith("Page text ")
+    # an unusable /Length (same width, so xref offsets still hold) falls
+    # back to the endstream search
+    n = re.search(rb"/FlateDecode /Length (\d+) >>", data).group(1)
+    bad = data.replace(b"/Length " + n, b"/Length " + b"0".rjust(len(n), b"0"), 1)
+    assert decode_pdf_bytes(bad) == text

@@ -7,11 +7,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from eget_spark.operators.cuckoo import (
-    ShardedCuckoo,
-    anti_join_seen_cuckoo,
-    build_cuckoo,
-)
+from eget_spark.operators.cuckoo import ShardedCuckoo, build_cuckoo
+from eget_spark.operators.seen import anti_join_seen
 
 URLS = [f"https://h{i % 17}.example.com/p/{i}" for i in range(5000)]
 OTHERS = [f"https://h{i % 13}.example.net/q/{i}" for i in range(5000)]
@@ -94,7 +91,8 @@ def test_anti_join_equals_exact(spark):
     seen = spark.createDataFrame([(u,) for u in URLS[1000:1250]], "url string")
     cf = build_cuckoo(seen, "url", expected=1000, n_shards=8)
     got = sorted(
-        r["url"] for r in anti_join_seen_cuckoo(cand, seen, "url", cf).collect()
+        r["url"]
+        for r in anti_join_seen(cand, seen, "url", prefilter=cf).collect()
     )
     want = sorted(set(URLS[:1500]) - set(URLS[1000:1250]))
     assert got == want
@@ -171,15 +169,13 @@ def test_expire_dedupes_duplicate_rows(spark):
 def test_null_urls_never_members(spark):
     """Round-3 advice regression (low): xxhash64(NULL) is the seed sentinel;
     builds must skip null rows and probes must report null as not-seen."""
-    from eget_spark.operators.cuckoo import cuckoo_maybe_contains
-
     df = spark.createDataFrame(
         [(u,) for u in URLS[:200]] + [(None,)] * 3, "url string"
     )
     cf = build_cuckoo(df, "url", expected=200, n_shards=4)
     probe = spark.createDataFrame([(None,), (URLS[0],)], "url string")
     got = (
-        probe.withColumn("hit", cuckoo_maybe_contains(spark, cf, F.col("url")))
+        probe.withColumn("hit", cf.maybe_contains(spark, F.col("url")))
         .orderBy(F.col("url").asc_nulls_first())
         .collect()
     )

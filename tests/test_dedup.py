@@ -46,19 +46,21 @@ def test_exact_dedup(docs):
 
 
 def test_ngram_jaccard_matches_python(docs):
-    got = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(docs, "id", "text", threshold=0.01).collect()
-    }
     rows = {r["id"]: r["text"] for r in docs.selectExpr("id", "text").collect()}
-    for a, b in itertools.combinations(sorted(rows), 2):
-        sa, sb = _py_shingles(rows[a]), _py_shingles(rows[b])
-        j = len(sa & sb) / len(sa | sb)
-        if j >= 0.01:
-            assert (a, b) in got
-            assert abs(got[(a, b)] - round(j, 6)) < 1e-9
-        else:
-            assert (a, b) not in got
+    # an int id column takes the same numpy-kernel path as a long one
+    for df in (docs, docs.withColumn("id", F.col("id").cast("int"))):
+        got = {
+            (r["id_a"], r["id_b"]): r["jaccard"]
+            for r in ngram_jaccard_pairs(df, "id", "text", threshold=0.01).collect()
+        }
+        for a, b in itertools.combinations(sorted(rows), 2):
+            sa, sb = _py_shingles(rows[a]), _py_shingles(rows[b])
+            j = len(sa & sb) / len(sa | sb)
+            if j >= 0.01:
+                assert (a, b) in got
+                assert abs(got[(a, b)] - round(j, 6)) < 1e-9
+            else:
+                assert (a, b) not in got
 
 
 def test_minhash_lsh_finds_exact_and_near_dups(docs):

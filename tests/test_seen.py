@@ -34,7 +34,8 @@ def test_anti_join_with_bloom_equals_exact(spark):
     bloom = build_bloom(seen, "url", expected=64, fpp=0.3)
     exact = {r["url"] for r in cand.join(seen, "url", "left_anti").collect()}
     with_bloom = {
-        r["url"] for r in anti_join_seen(cand, seen, "url", bloom=bloom).collect()
+        r["url"]
+        for r in anti_join_seen(cand, seen, "url", prefilter=bloom).collect()
     }
     assert with_bloom == exact
 
@@ -59,14 +60,12 @@ def test_bloom_null_urls_never_members(spark):
     contract of the driver-side APIs, now held on DataFrames too)."""
     from pyspark.sql import functions as F
 
-    from eget_spark.operators.seen import bloom_maybe_contains
-
     urls = [f"https://n{i}.example.com/{i}" for i in range(300)]
     df = spark.createDataFrame([(u,) for u in urls] + [(None,)] * 4, "url string")
     bloom = build_bloom(df, "url", expected=300, fpp=0.01)
     probe = spark.createDataFrame([(None,), (urls[0],), (urls[299],)], "url string")
     got = (
-        probe.withColumn("hit", bloom_maybe_contains(spark, bloom, F.col("url")))
+        probe.withColumn("hit", bloom.maybe_contains(spark, F.col("url")))
         .orderBy(F.col("url").asc_nulls_first())
         .collect()
     )
@@ -128,8 +127,6 @@ def test_bloom_list_and_dataframe_paths_interoperate(spark):
     the driver-list probe API and vice versa."""
     from pyspark.sql import functions as F
 
-    from eget_spark.operators.seen import bloom_maybe_contains, build_bloom
-
     urls = [f"https://h{i % 3}.example.com/p/{i:05d}" for i in range(400)]
     df = spark.createDataFrame([(u,) for u in urls], "url string")
     bf = build_bloom(df, "url", expected=1000)
@@ -140,6 +137,6 @@ def test_bloom_list_and_dataframe_paths_interoperate(spark):
     probe = spark.createDataFrame(
         [("https://extra.example.com/only-driver",), ("https://nope.example.com/x",)],
         "url string",
-    ).select("url", bloom_maybe_contains(spark, bf, F.col("url")).alias("hit"))
+    ).select("url", bf.maybe_contains(spark, F.col("url")).alias("hit"))
     got = {r["url"]: r["hit"] for r in probe.collect()}
     assert got["https://extra.example.com/only-driver"] is True

@@ -94,3 +94,19 @@ def test_global_seq_bucketed_matches_range_path(spark):
     assert b.total == len(rows)
     a.unpersist()
     b.unpersist()
+
+
+def test_global_seq_bucket_failure_restores_aqe(spark):
+    """A bucket_expr that does not resolve raises, and the session's AQE
+    setting is what it was before the call (the bucket branch's AQE-off
+    scope restores it on the way out)."""
+    import pytest
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import functions as F
+
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    df = spark.createDataFrame([(1,), (2,)], "k long")
+    with pytest.raises(AnalysisException):
+        with_global_seq(df, ["k"], bucket_expr=F.col("nope"))
+    assert spark.conf.get(key) == before

@@ -271,13 +271,13 @@ def main() -> None:
 
     # 16. bloom probe: hashing in codegen (xxhash64 columns), probe UDF
     # receives int64 pairs — no per-row Python hashing (round-3)
-    from eget_spark.operators.seen import BloomFilter, bloom_maybe_contains
+    from eget_spark.operators.seen import BloomFilter
 
     bf = BloomFilter.sized(1000, 0.01)
     bf.add_many(["https://h.example.com/p/1"])
     add(
         "bloom probe (xxhash64-keyed, D1)",
-        urls.withColumn("m", bloom_maybe_contains(spark, bf, F.col("url"))),
+        urls.withColumn("m", bf.maybe_contains(spark, F.col("url"))),
         {"xxhash64": True, "ArrowEvalPython": True, "BatchEvalPython": False},
         "The filter key (xxhash64(url), xxhash64(url, 1)) is computed in "
         "whole-stage codegen; the Arrow UDF does pure numpy bit gathers "
