@@ -28,10 +28,12 @@ Scale notes (the 10^10 story):
   the corpus side then scans in bucket order with NO exchange (pinned by
   test_bucketed.py); only the frontier shuffles
 - seen membership: Bloom pre-filter + exact anti-join (seen.py)
-- every round ends in eager localCheckpoint (table mode: parquet append)
-  so plan lineage stays O(1) across rounds — the Iceberg-append analogue;
-  with Iceberg jars on the classpath the same writes become
-  ``writeTo(...).append()`` snapshots (import-gated, see plans/tables.py)
+- plan lineage stays O(1) across rounds: in memory every round's state
+  ends in a localCheckpoint; with ``table_dir`` set (durable mode) each
+  round is committed in one write job carrying every row kind, its
+  counters come from an ``Observation`` on that write, and the next
+  round's frontier, seen, order and pages parts are read back from the
+  commit (protocol and layout: plans/tables.py; Iceberg with a catalog)
 """
 
 from __future__ import annotations
@@ -39,7 +41,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -56,10 +58,12 @@ from ..operators.politeness import schedule_round
 from ..operators.seen import BloomFilter, anti_join_seen, build_bloom
 from ..operators.sequence import with_global_seq
 from ..operators.traps import url_template
-from .tables import CrawlRun
+from .tables import FRONTIER_COLS, CrawlRun
 
-FRONTIER_COLS = ["url", "host", "depth", "parent_url", "seq"]
 _FRONTIER_SCHEMA = "url string, host string, depth int, parent_url string, seq long"
+PAGE_COLS = [
+    "url", "host", "depth", "parent_url", "seq", "round", "status", "markdown", "spans",
+]
 
 
 @dataclass
@@ -288,7 +292,11 @@ def crawl(
     They pre-seed the seen set: any seed or discovered link hitting them
     is dropped by the normal anti-join.  Both caps budget THIS run's
     admissions; prior-run pages don't count against them."""
-    run = CrawlRun(spark, table_dir, catalog) if table_dir else None
+    run = (
+        CrawlRun(spark, table_dir, docs.schema["spans"].dataType, catalog)
+        if table_dir
+        else None
+    )
     if priorities is not None:
         # uniqueness guard: the table is arbitrary user parquet
         # (jobs/crawl_job.py --priorities); duplicate urls would multiply
@@ -304,7 +312,7 @@ def crawl(
         robots_f = robots
 
     if table_dir and resume:
-        state = _load_state(spark, run)
+        state = _load_state(run)
     else:
         state = None
 
@@ -359,11 +367,14 @@ def crawl(
             # which is fine at list-seed sizes.
             bucket_expr=F.floor(F.col("order") / F.lit(1024)),
         )
-        frontier = _checkpoint(
-            sr0.df.where(F.col("seq") < config.max_pages).select(FRONTIER_COLS)
-        )
-        sr0.unpersist()
-        frontier_count = frontier.count()
+        frontier = sr0.df.where(F.col("seq") < config.max_pages).select(FRONTIER_COLS)
+        if run:
+            frontier, frontier_count = _commit_seeds(spark, run, frontier, 1)
+            sr0.unpersist()
+        else:
+            frontier = _checkpoint(frontier)
+            sr0.unpersist()
+            frontier_count = frontier.count()
         seen_parts = (
             [prior_seen.select("url")] if prior_seen is not None else []
         ) + [frontier.select("url")]
@@ -371,10 +382,6 @@ def crawl(
         success_total = 0
         round_no = 0
         stats = []
-        if run:
-            run.admitted.append(frontier.withColumn("round", F.lit(0)), 0)
-            run.pending.append(frontier, 0)
-            _write_log(run, 0, 0, 0, 0, frontier_count, 0, admitted_total, 0)
         pages_parts = []
         order_parts = [frontier.withColumn("round", F.lit(0))]
     elif state is None:
@@ -413,7 +420,10 @@ def crawl(
             ),
             "url string, depth int, parent_url string, seq long",
         ).withColumn("host", host_of(F.col("url"))).select(FRONTIER_COLS)
-        frontier = _checkpoint(frontier)
+        if run:
+            frontier, _ = _commit_seeds(spark, run, frontier, len(seeds))
+        else:
+            frontier = _checkpoint(frontier)
         # `seen` is kept as a union of per-round checkpointed parts — no
         # O(|seen|) re-materialization per round (the Iceberg-append shape)
         seen_parts: list[DataFrame] = [frontier.select("url")]
@@ -421,35 +431,30 @@ def crawl(
         success_total = 0
         round_no = 0
         stats: list[RoundStats] = []
-        if run:
-            run.admitted.append(frontier.withColumn("round", F.lit(0)), 0)
-            run.pending.append(frontier, 0)
-            _write_log(run, 0, 0, 0, 0, len(seeds), 0, admitted_total, 0)
         pages_parts: list[DataFrame] = []
         order_parts: list[DataFrame] = [frontier.withColumn("round", F.lit(0))]
         frontier_count = len(seeds)
     else:
-        frontier, seen0, admitted_total, success_total, round_no, stats = state
+        (
+            frontier, frontier_count, seen0, admitted_total, success_total,
+            round_no, stats,
+        ) = state
         seen_parts = [seen0]
         # returned handles must cover the WHOLE crawl, not just post-resume
         # rounds — seed them from the tables (round-1 advice fix)
-        try:
-            pages_parts = [run.docs.read_upto(round_no).drop("partition_id")]
-        except Exception:  # no docs appended yet (resumed after round 0)
-            pages_parts = []
-        order_parts = [run.admitted.read_upto(round_no)]
-        frontier_count = frontier.count()
+        pages_parts = [run.read_upto(round_no, "docs").select(PAGE_COLS)]
+        order_parts = [run.read_upto(round_no, "admitted")]
 
     # per-host admission counters (max_pages_per_host): a tiny (host, _n)
     # table, rebuilt from the admitted history on resume.  Seeds are
-    # persisted as admitted round 0 (both seed paths above append to
-    # run.admitted before round 1), so the fresh-run source (`frontier` =
-    # seeds) and the resume source (admitted history) count the SAME rows —
+    # committed as admitted round 0 (both seed paths above commit round 0
+    # before round 1), so the fresh-run source (`frontier` = seeds) and
+    # the resume source (admitted history) count the SAME rows —
     # the straight-through and resumed histograms (and the trap histogram
     # below, which shares hc_src's two sources) are provably identical.
     host_counts: DataFrame | None = None
     if config.max_pages_per_host is not None:
-        hc_src = frontier if state is None else run.admitted.read_upto(round_no)
+        hc_src = frontier if state is None else run.read_upto(round_no, "admitted")
         host_counts = _checkpoint(_count_by(hc_src, ["host"]))
 
     # spider-trap throttle state: running (host, template, _n) histogram of
@@ -458,13 +463,12 @@ def crawl(
     # checkpointed frame, O(hosts x templates)
     tmpl_counts: DataFrame | None = None
     if config.auto_trap_threshold is not None:
-        # resume parity (round-4 advice): both seed paths persist the seed
-        # frontier as admitted round 0 (`run.admitted.append(..., 0)`
-        # above), so the resumed histogram source (admitted history)
-        # contains the exact rows the fresh-run source (seed frontier)
-        # contributes — straight-through and resumed crawls flag
-        # identically
-        tc_src = frontier if state is None else run.admitted.read_upto(round_no)
+        # resume parity (round-4 advice): both seed paths commit the seed
+        # frontier as admitted round 0 (`_commit_seeds` above), so the
+        # resumed histogram source (admitted history) contains the exact
+        # rows the fresh-run source (seed frontier) contributes —
+        # straight-through and resumed crawls flag identically
+        tc_src = frontier if state is None else run.read_upto(round_no, "admitted")
         tmpl_counts = _checkpoint(
             _count_by(
                 tc_src.select("host", url_template(F.col("url")).alias("template")),
@@ -513,6 +517,7 @@ def crawl(
     while frontier_count > 0 and success_total < config.max_pages and round_no < config.max_rounds:
         round_no += 1
         t0 = time.monotonic()
+        committed_sr = None  # durable mode: sequencing persist the commit reads
 
         # trap-host residual throttle: flagged hosts become synthetic
         # politeness entries with delay round_window/(budget+0.5), i.e.
@@ -615,66 +620,54 @@ def crawl(
                     )
                 )
             retry_ledger = new_ledger
-        # without politeness the whole frontier is fetched: no extra job
-        attempted = fetch_now.count() if politeness_active else frontier_count
-        attempted_list.append(attempted)
-        hits_parts.append(hits)
-        success_list.append(None)
-        # success counting is DEFERRED while the page cap cannot possibly
-        # bind (true success_total <= admitted_total < max_pages), saving a
-        # job per round; table mode always counts (the log needs it)
-        if table_dir is not None or admitted_total >= config.max_pages:
-            while counted < len(hits_parts):
-                c = hits_parts[counted].count()
-                success_list[counted] = c
-                success_total += c
-                counted += 1
-        success = success_list[-1]
-        failed = attempted - success if success is not None else None
+        if run is None:
+            # without politeness the whole frontier is fetched: no extra job
+            attempted = fetch_now.count() if politeness_active else frontier_count
+            attempted_list.append(attempted)
+            hits_parts.append(hits)
+            success_list.append(None)
+            # success counting is DEFERRED while the page cap cannot
+            # possibly bind (true success_total <= admitted_total <
+            # max_pages), saving a job per round; durable mode observes
+            # both counters on the round's commit instead
+            if admitted_total >= config.max_pages:
+                while counted < len(hits_parts):
+                    c = hits_parts[counted].count()
+                    success_list[counted] = c
+                    success_total += c
+                    counted += 1
+            success = success_list[-1]
+            failed = attempted - success if success is not None else None
 
-        # S6: emitted page rows (markdown assembled at emit time in table
-        # mode, X7; the in-memory path defers markdown to ONE projection
-        # over the final union — a per-round column would plan one
+        # S6: emitted page rows.  Markdown (X7) is assembled later in ONE
+        # projection: over the final union in memory, over each round's
+        # commit in durable mode — a per-round column would plan one
         # ArrowEvalPython node per union branch, and every consumer task
         # then opens a Python channel per branch it reads: measured 2x on
-        # the 30k-page markdown pass)
-        def _ok_rows(with_markdown: bool):
-            cols = [
-                "url", "host", "depth", "parent_url", "seq",
-                F.lit(round_no).alias("round"),
-                F.lit("ok").alias("status"),
-            ]
-            if with_markdown:
-                cols.append(assemble_markdown(F.col("spans")).alias("markdown"))
-            return hits.select(*cols, "spans")
-
-        def _miss_rows(m, rnd_col, with_markdown=True):
-            cols = [
-                "url", "host", "depth", "parent_url", "seq",
-                rnd_col.alias("round"),
-                F.lit("missing").alias("status"),
-            ]
-            if with_markdown:
-                cols.append(F.lit(None).cast("string").alias("markdown"))
-            return m.select(
-                *cols,
-                F.lit(None).cast(docs.schema["spans"].dataType).alias("spans"),
-            )
-
+        # the 30k-page markdown pass
         if run:
-            emitted = _ok_rows(True).unionByName(
-                _miss_rows(exhausted, F.lit(round_no))
-            )
-            run.docs.append(
-                emitted.withColumn("partition_id", F.spark_partition_id()), round_no
-            )
-            pages_parts.append(run.docs.read_round(round_no).drop("partition_id"))
+            # (kinds, rows, columns) parts of the round's commit
+            pid = F.spark_partition_id()
+            emitted = [
+                (("docs",), hits, {"status": F.lit("ok"), "partition_id": pid}),
+                (
+                    ("docs",), exhausted,
+                    {"status": F.lit("missing"), "partition_id": pid},
+                ),
+            ]
         else:
             # LAZY over the checkpointed hits/frontier — markdown assembly
             # (the heaviest UDF) runs once over the final union instead of
             # once per round; misses resolved by ONE end-of-crawl anti-join
             # instead of a driver-serial broadcast build per round
-            pages_parts.append(_ok_rows(False))
+            pages_parts.append(
+                hits.select(
+                    "url", "host", "depth", "parent_url", "seq",
+                    F.lit(round_no).alias("round"),
+                    F.lit("ok").alias("status"),
+                    "spans",
+                )
+            )
             fetch_parts.append(
                 fetch_now.select(*FRONTIER_COLS, F.lit(round_no).alias("round"))
             )
@@ -819,17 +812,47 @@ def crawl(
                 F.col("base").alias("parent_url"),
                 F.col("seq"),
             )
-            if run is None and not politeness_active:
+            if run is not None:
+                # durable mode: the round's commit below writes `admitted`
+                # straight from the sequencing persist, then frees it
+                committed_sr = sr
+            elif not politeness_active:
                 # in-memory fast path: defer materialization — the checkpoint
                 # computes inside the NEXT round's sequencing job (one job per
-                # round instead of two); table/politeness modes materialize now
-                # (their per-round writes/counts need it anyway)
+                # round instead of two); politeness mode materializes now
+                # (its per-round counts need it anyway)
                 admitted = admitted.localCheckpoint(eager=False)
                 pending_sr = sr
             else:
                 admitted = _checkpoint(admitted)
                 sr.unpersist()
             n_admitted = min(sr.total, max(0, config.max_pages - admitted_total))
+        if run:
+            # ONE write job commits the round; its counters come from the
+            # write's Observation, and the next round's state is read back
+            # from the commit instead of checkpointed and counted
+            parts = [*emitted, (("admitted", "pending"), admitted, {})]
+            if retry_next is not None:
+                parts.append((("pending",), retry_next, {"_src": F.lit("retry")}))
+            if politeness_active:
+                parts.append((("pending",), deferred, {"_src": F.lit("deferred")}))
+            logged = _commit_round(
+                spark, run, round_no, parts,
+                frontier_count + n_admitted, admitted_total, success_total,
+            )
+            if committed_sr is not None:
+                committed_sr.unpersist()
+            admitted = run.read_round(round_no, "admitted")
+            frontier = run.read_round(round_no, "pending")
+            frontier_count = logged["pending"]
+            pages_parts.append(
+                run.read_round(round_no, "docs")
+                .withColumn("round", F.lit(round_no))
+                .select(PAGE_COLS)
+            )
+            attempted, success = logged["attempted"], logged["success"]
+            failed, n_deferred = logged["failed"], logged["deferred"]
+            success_total = logged["success_total"]
         admitted_total += n_admitted
         if bloom is not None and n_admitted > 0:
             # distributed delta: same shape as the running filter, built
@@ -841,7 +864,8 @@ def crawl(
             else:
                 bloom = None  # saturated: rebuild distributed from seen below
         if n_admitted > 0:
-            seen_parts.append(admitted.select("url"))  # admitted is checkpointed
+            # admitted is checkpointed (durable mode: read from the commit)
+            seen_parts.append(admitted.select("url"))
             if len(seen_parts) > config.seen_compact_parts:
                 seen_parts = [_checkpoint(_union_all(seen_parts))]
         if config.max_pages_per_host is not None and n_admitted > 0:
@@ -858,24 +882,25 @@ def crawl(
         if n_admitted > 0:
             order_parts.append(admitted.withColumn("round", F.lit(round_no)))
 
-        n_retry = 0
-        if retry_next is not None:
-            parts = [admitted, retry_next]
-            if politeness_active:
-                parts.append(deferred.select(FRONTIER_COLS))
-            frontier = _checkpoint(_union_all(parts))
-            frontier_count = frontier.count()
-            # m_att is checkpointed: this count reuses it, no recompute
-            n_retry = retry_next.count()
-        elif politeness_active:
-            frontier = _checkpoint(deferred.select(FRONTIER_COLS).unionByName(admitted))
-            frontier_count = frontier.count()
-        else:
-            # no deferrals possible: the new frontier IS the admitted set
-            # (already checkpointed) — saves a materialization + count
-            frontier = admitted
-            frontier_count = n_admitted
-        n_deferred = frontier_count - n_admitted - n_retry
+        if run is None:
+            n_retry = 0
+            if retry_next is not None:
+                parts = [admitted, retry_next]
+                if politeness_active:
+                    parts.append(deferred.select(FRONTIER_COLS))
+                frontier = _checkpoint(_union_all(parts))
+                frontier_count = frontier.count()
+                # m_att is checkpointed: this count reuses it, no recompute
+                n_retry = retry_next.count()
+            elif politeness_active:
+                frontier = _checkpoint(deferred.select(FRONTIER_COLS).unionByName(admitted))
+                frontier_count = frontier.count()
+            else:
+                # no deferrals possible: the new frontier IS the admitted set
+                # (already checkpointed) — saves a materialization + count
+                frontier = admitted
+                frontier_count = n_admitted
+            n_deferred = frontier_count - n_admitted - n_retry
 
         stats.append(
             RoundStats(
@@ -883,13 +908,6 @@ def crawl(
                 admitted_total, success_total, time.monotonic() - t0,
             )
         )
-        if run:
-            run.admitted.append(admitted.withColumn("round", F.lit(round_no)), round_no)
-            run.pending.append(frontier, round_no)
-            _write_log(
-                run, round_no, attempted, success, failed,
-                n_admitted, n_deferred, admitted_total, success_total,
-            )
 
     if pending_sr is not None:
         # last round's admitted never flowed into a next-round job: force
@@ -975,11 +993,7 @@ def crawl(
             "url string, host string, depth int, parent_url string, seq long, "
             "round int, status string, markdown string",
         ).withColumn("spans", F.lit(None).cast(docs.schema["spans"].dataType))
-    order = _union_all(order_parts) if order_parts else None
-    if order is None and run:
-        order = run.admitted.read()
-    if run and not pages_parts:
-        pages = run.docs.read().drop("partition_id")
+    order = _union_all(order_parts)
     return CrawlResult(
         pages=pages,
         order=order,
@@ -1019,34 +1033,94 @@ def _union_all(parts: list[DataFrame]) -> DataFrame:
     return out
 
 
-_LOG_SCHEMA = (
-    "round int, attempted long, success long, failed long, admitted long, "
-    "deferred long, admitted_total long, success_total long"
-)
+def _commit_round(
+    spark: SparkSession,
+    run: CrawlRun,
+    round_no: int,
+    parts: list[tuple[tuple[str, ...], DataFrame, dict]],
+    row_bound: int,
+    admitted_before: int,
+    success_before: int,
+) -> dict:
+    """Commit one durable round (plans/tables.py) in ONE write job and
+    return its log row.  ``parts`` are (kinds, rows, columns): the rows
+    are written once per kind from one scan (admitted rows are also the
+    next round's pending ones), with ``columns`` overriding row columns;
+    a ``_src`` column (retry or deferred) marks pending rows for the
+    counters only.  An Observation gathers every counter on the write
+    itself: attempted = successes + exhausted misses + retries.  The
+    write's partition count comes from ``row_bound`` (rows the driver
+    knows the round holds at most), so a request-sized round writes one
+    file per kind."""
+    obs = Observation()
 
+    def n(cond):
+        return F.count(F.when(cond, 1))
 
-def _write_log(run, r, att, suc, fail, adm, defer, adm_tot, suc_tot):
-    run.log.append(
-        run.log.spark.createDataFrame(
-            [(r, att, suc, fail, adm, defer, adm_tot, suc_tot)], _LOG_SCHEMA
-        ),
-        r,
+    rows = (
+        _union_all(
+            [
+                run.rows(df, *kinds, **{"_src": F.lit(None).cast("string"), **cols})
+                for kinds, df, cols in parts
+            ]
+        )
+        .observe(
+            obs,
+            n(F.col("kind") == "admitted").alias("admitted"),
+            n(F.col("kind") == "pending").alias("pending"),
+            n(F.col("status") == "ok").alias("success"),
+            n(F.col("status") == "missing").alias("exhausted"),
+            n(F.col("_src") == "retry").alias("retry"),
+            n(F.col("_src") == "deferred").alias("deferred"),
+        )
+        .drop("_src")
+        .coalesce(_seq_partitions(spark, row_bound))
     )
+    if any("docs" in kinds for kinds, _, _ in parts):
+        # one markdown projection over the coalesced rows: per docs input
+        # partition it would cost a Python round-trip each, serially in
+        # the coalesced task; NULL spans (every non-docs and miss row)
+        # assemble to NULL
+        rows = rows.withColumn("markdown", assemble_markdown(F.col("spans")))
+
+    def log() -> dict:
+        m = obs.get
+        attempted = m["success"] + m["exhausted"] + m["retry"]
+        return {
+            "round": round_no,
+            "attempted": attempted,
+            "success": m["success"],
+            "failed": attempted - m["success"],
+            "admitted": m["admitted"],
+            "deferred": m["deferred"],
+            "admitted_total": admitted_before + m["admitted"],
+            "success_total": success_before + m["success"],
+            "pending": m["pending"],  # the next frontier's size
+        }
+
+    return run.append(rows, round_no, log)
 
 
-def _load_state(spark: SparkSession, run):
-    """Resume from the latest committed round (log row = commit marker)."""
-    try:
-        log = run.log.read()
-    except Exception:
-        return None
-    rows = log.orderBy("round").collect()
+def _commit_seeds(
+    spark: SparkSession, run: CrawlRun, seeds: DataFrame, row_bound: int
+) -> tuple[DataFrame, int]:
+    """Round 0 of a durable crawl: commit the admitted seeds as both
+    ``admitted`` and ``pending``; returns the frontier read back from the
+    commit and its size."""
+    logged = _commit_round(
+        spark, run, 0, [(("admitted", "pending"), seeds, {})], row_bound, 0, 0
+    )
+    return run.read_round(0, "pending"), logged["pending"]
+
+
+def _load_state(run: CrawlRun):
+    """Resume from the latest committed round: its log row (read on the
+    driver) holds the counters, its pending rows are the frontier."""
+    rows = run.log_rows()
     if not rows:
         return None
     last = rows[-1]
     r = last["round"]
-    frontier = _checkpoint(run.pending.read_round(r).select(FRONTIER_COLS))
-    seen = _checkpoint(run.admitted.read_upto(r).select("url"))
     stats = [
         RoundStats(
             x["round"], x["attempted"], x["success"], x["failed"], x["admitted"],
@@ -1055,7 +1129,15 @@ def _load_state(spark: SparkSession, run):
         for x in rows
         if x["round"] > 0
     ]
-    return frontier, seen, last["admitted_total"], last["success_total"], r, stats
+    return (
+        run.read_round(r, "pending"),
+        last["pending"],
+        run.read_upto(r, "admitted").select("url"),
+        last["admitted_total"],
+        last["success_total"],
+        r,
+        stats,
+    )
 
 
 def recrawl(

@@ -1,44 +1,123 @@
-"""Append-only, round-partitioned tables (the Iceberg-shaped storage layer).
+"""Round-partitioned crawl state: one idempotent commit per crawl round.
 
-In deployment these are Iceberg tables (`writeTo(...).append()` per crawl
-round = one snapshot; resume = read up to the last committed round;
-snapshot expiry = the reference's cache TTL, SURVEY.md S4). Iceberg jars
-are not on this sandbox's classpath, so the default backend is plain
-parquet directories with `round=N` partitions — the layout is identical
-and `crawl()` is backend-agnostic.
+A durable crawl (``crawl(..., table_dir=...)``) keeps its state in one
+table partitioned by ``round`` and ``kind``.  A round's rows come in three
+kinds, all with the frontier columns (url, host, depth, parent_url, seq):
 
-To use Iceberg, configure a catalog on the session, e.g.::
+- ``docs``: the page rows the round emitted (fetch hits plus exhausted
+  misses), with status, markdown, spans and partition_id;
+- ``admitted``: the URLs the round admitted (seen set, admission order);
+- ``pending``: the next round's frontier.
+
+Each round also has one log row, its ``RoundStats`` counters plus the
+next frontier's size (``pending``).  The log row is the commit marker.
+
+Commit protocol (parquet, the default backend), all inside one
+:meth:`RoundTable.append` call:
+
+1. one Spark job writes every row of the round, ``partitionBy("kind")``,
+   into ``{root}/_staging/{name}/round=N``, replacing whatever an earlier
+   attempt at round N left there;
+2. the driver writes the log row as ``_log.json`` into the same staging
+   directory through the Hadoop ``FileSystem`` API (no Spark job);
+3. one rename publishes the directory as ``{root}/{name}/round=N``.
+
+Layout of a crawl's ``table_dir`` (``name`` is ``rounds``)::
+
+    rounds/round=N/kind=docs/part-*.parquet
+    rounds/round=N/kind=admitted/part-*.parquet
+    rounds/round=N/kind=pending/part-*.parquet
+    rounds/round=N/_log.json
+    _staging/rounds/round=N/...              (a round not yet published)
+
+Readers see published rounds only: resume reads their log rows on the
+driver, and a crash at any step leaves at most an unpublished staging
+directory, which the re-run of that round replaces, so a round is never
+written twice.  Reads name their schema, so none runs a schema-inference
+job.
+
+Iceberg (``catalog=`` naming a configured catalog, e.g.::
 
     spark.sql.catalog.eget = org.apache.iceberg.spark.SparkCatalog
     spark.sql.catalog.eget.type = hadoop
     spark.sql.catalog.eget.warehouse = <path>
 
-and pass ``catalog="eget"`` — writes become Iceberg appends; everything
-else is unchanged.
+): one table ``<catalog>.<name>`` partitioned by ``round`` and ``kind``.
+A round's rows are written with ``overwritePartitions()``, then its log
+row (kind ``log``, the JSON in column ``log``) with a second one-row
+``overwritePartitions()``; that second snapshot is the commit, and reads
+keep only rounds that have a log row.  A re-run round overwrites its own
+partitions.  The table is created on the first write, and only when the
+catalog reports it missing.
 """
 
 from __future__ import annotations
 
+import json
 import os
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+FRONTIER_COLS = ["url", "host", "depth", "parent_url", "seq"]
+KIND_COLS = {
+    "docs": FRONTIER_COLS + ["status", "markdown", "spans", "partition_id"],
+    "admitted": FRONTIER_COLS,
+    "pending": FRONTIER_COLS,
+}
+_LOG = "_log.json"
+
+
+def round_schema(spans_type: T.DataType) -> T.StructType:
+    """Columns of a committed row, ``kind`` aside: admitted and pending
+    rows leave the docs-only columns NULL."""
+    return T.StructType(
+        [
+            T.StructField("url", T.StringType()),
+            T.StructField("host", T.StringType()),
+            T.StructField("depth", T.IntegerType()),
+            T.StructField("parent_url", T.StringType()),
+            T.StructField("seq", T.LongType()),
+            T.StructField("status", T.StringType()),
+            T.StructField("markdown", T.StringType()),
+            T.StructField("spans", spans_type),
+            T.StructField("partition_id", T.IntegerType()),
+        ]
+    )
+
+
+def _extend(schema: T.StructType, *fields: tuple) -> T.StructType:
+    """A copy of ``schema`` with (name, type) fields appended
+    (``StructType.add`` would change ``schema`` itself)."""
+    return T.StructType(schema.fields + [T.StructField(n, t) for n, t in fields])
+
+
+def _table_missing(exc: Exception) -> bool:
+    """Whether a catalog write failed because the table does not exist."""
+    return "TABLE_OR_VIEW_NOT_FOUND" in str(exc)
 
 
 class RoundTable:
-    """One logical table appended once per crawl round."""
+    """One round-partitioned table, committed once per crawl round.
+
+    ``schema`` (see :func:`round_schema`) is the row layout, ``kind``
+    aside; reads name it, so they run no schema-inference job."""
 
     def __init__(
         self,
         spark: SparkSession,
         root: str,
         name: str,
+        schema: T.StructType,
         catalog: str | None = None,
     ):
         self.spark = spark
         self.root = root
         self.name = name
         self.catalog = catalog
+        self.schema = schema
         if catalog is not None:
             impl = spark.conf.get(f"spark.sql.catalog.{catalog}", None)
             if not impl:
@@ -48,52 +127,192 @@ class RoundTable:
 
     # -- write ---------------------------------------------------------------
 
-    def append(self, df: DataFrame, round_no: int) -> None:
+    def rows(self, df: DataFrame, *kinds: str, **cols: Column) -> DataFrame:
+        """``df`` as rows of this table, once per kind in ``kinds`` from one
+        scan of ``df``: the row columns (``cols`` first, then ``df``'s,
+        else typed NULL), any other ``cols``, and ``kind``."""
+        have, rest = set(df.columns), dict(cols)
+
+        def col(f: T.StructField) -> Column:
+            if f.name in rest:
+                return rest.pop(f.name).cast(f.dataType)
+            if f.name in have:
+                return F.col(f.name)
+            return F.lit(None).cast(f.dataType)
+
+        row = [col(f).alias(f.name) for f in self.schema]
+        extra = [c.alias(name) for name, c in rest.items()]
+        kind = F.lit(kinds[0])
+        if len(kinds) > 1:
+            kind = F.explode(F.array(*map(F.lit, kinds)))
+        return df.select(*row, *extra, kind.alias("kind"))
+
+    def append(
+        self, rows: DataFrame, round_no: int, log: Callable[[], dict]
+    ) -> dict:
+        """Commit round ``round_no``: ``rows`` (with a ``kind`` column) in
+        one write job, then the log row ``log()`` returns (called once the
+        rows are written, so observations on ``rows`` are ready), then
+        publish.  Returns the committed log row."""
+        self._stage_rows(rows, round_no)
+        row = log()
+        self._stage_log(round_no, row, rows.schema)
+        self._publish(round_no)
+        return row
+
+    def _stage_rows(self, rows: DataFrame, round_no: int) -> None:
         if self.catalog:
-            full = f"{self.catalog}.{self.name}"
-            out = df.withColumn("round", F.lit(round_no))
-            try:
-                out.writeTo(full).append()
-            except Exception:
-                out.writeTo(full).using("iceberg").partitionedBy("round").create()
+            self._overwrite(
+                rows.withColumn("round", F.lit(round_no)).withColumn(
+                    "log", F.lit(None).cast("string")
+                )
+            )
             return
-        df.write.mode("overwrite").parquet(f"{self.root}/{self.name}/round={round_no}")
+        (
+            rows.write.mode("overwrite")
+            # static: the whole staging directory of the round is
+            # replaced, whatever the session's overwrite mode
+            .option("partitionOverwriteMode", "static")
+            # the rename below is the commit marker, not _SUCCESS
+            .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+            .partitionBy("kind")
+            .parquet(self._staging(round_no))
+        )
+
+    def _stage_log(self, round_no: int, row: dict, schema: T.StructType) -> None:
+        if self.catalog:
+            full = _extend(schema, ("round", T.IntegerType()), ("log", T.StringType()))
+            values = {"kind": "log", "round": round_no, "log": json.dumps(row)}
+            self._overwrite(
+                self.spark.createDataFrame(
+                    [tuple(values.get(f.name) for f in full)], full
+                )
+            )
+            return
+        out = self._fs().create(self._path(f"{self._staging(round_no)}/{_LOG}"), True)
+        try:
+            out.write(bytearray(json.dumps(row).encode()))
+        finally:
+            out.close()
+
+    def _publish(self, round_no: int) -> None:
+        if self.catalog:
+            return  # the log row's snapshot is the commit
+        fs = self._fs()
+        dst = self._path(self._round_dir(round_no))
+        if fs.exists(dst):
+            fs.delete(dst, True)
+        fs.mkdirs(dst.getParent())
+        if not fs.rename(self._path(self._staging(round_no)), dst):
+            raise OSError(f"could not publish round {round_no} to {dst}")
+
+    def _overwrite(self, df: DataFrame) -> None:
+        full = f"{self.catalog}.{self.name}"
+        try:
+            df.writeTo(full).overwritePartitions()
+        except Exception as exc:
+            if not _table_missing(exc):
+                raise
+            df.writeTo(full).using("iceberg").partitionedBy("round", "kind").create()
 
     # -- read ----------------------------------------------------------------
 
-    def read(self) -> DataFrame:
+    def read(self, kind: str) -> DataFrame:
+        """Every committed round's ``kind`` rows, with ``round``."""
+        cols = KIND_COLS[kind] + ["round"]
         if self.catalog:
-            return self.spark.table(f"{self.catalog}.{self.name}")
-        return self.spark.read.option(
-            "basePath", f"{self.root}/{self.name}"
-        ).parquet(f"{self.root}/{self.name}/round=*")
-
-    def read_round(self, round_no: int) -> DataFrame:
-        if self.catalog:
-            return self.read().where(F.col("round") == round_no).drop("round")
-        return self.spark.read.parquet(f"{self.root}/{self.name}/round={round_no}")
-
-    def read_upto(self, round_no: int) -> DataFrame:
-        return self.read().where(F.col("round") <= round_no)
-
-    def rounds(self) -> list[int]:
-        try:
-            return sorted(
-                r["round"]
-                for r in self.read().select("round").distinct().collect()
+            t = self.spark.table(f"{self.catalog}.{self.name}")
+            committed = t.where(F.col("kind") == "log").select("round")
+            return (
+                t.where(F.col("kind") == kind)
+                .join(committed, "round", "left_semi")
+                .select(cols)
             )
-        except Exception:
-            return []
+        base = f"{self.root}/{self.name}"
+        if not self._fs().exists(self._path(base)):
+            return self._empty(kind).withColumn("round", F.lit(None).cast("int"))
+        parts = ("round", T.IntegerType()), ("kind", T.StringType())
+        return (
+            self.spark.read.schema(_extend(self.schema, *parts))
+            .option("basePath", base)
+            .parquet(base)
+            .where(F.col("kind") == kind)
+            .select(cols)
+        )
+
+    def read_round(self, round_no: int, kind: str) -> DataFrame:
+        """Round ``round_no``'s ``kind`` rows, without ``round``."""
+        if self.catalog:
+            return self.read(kind).where(F.col("round") == round_no).drop("round")
+        path = f"{self._round_dir(round_no)}/kind={kind}"
+        if not self._fs().exists(self._path(path)):
+            return self._empty(kind)  # the round had no rows of this kind
+        return self.spark.read.schema(self.schema).parquet(path).select(KIND_COLS[kind])
+
+    def read_upto(self, round_no: int, kind: str) -> DataFrame:
+        return self.read(kind).where(F.col("round") <= round_no)
+
+    def log_rows(self) -> list[dict]:
+        """The committed rounds' log rows, by round (read on the driver)."""
+        if self.catalog:
+            try:
+                got = (
+                    self.spark.table(f"{self.catalog}.{self.name}")
+                    .where(F.col("kind") == "log")
+                    .select("log")
+                    .collect()
+                )
+            except Exception as exc:
+                if not _table_missing(exc):
+                    raise
+                return []
+            rows = [json.loads(r["log"]) for r in got]
+        else:
+            pattern = self._path(f"{self.root}/{self.name}/round=*/{_LOG}")
+            found = self._fs().globStatus(pattern) or []
+            rows = [self._read_json(st.getPath()) for st in found]
+        return sorted(rows, key=lambda r: r["round"])
+
+    # -- helpers -------------------------------------------------------------
+
+    def _round_dir(self, round_no: int) -> str:
+        return f"{self.root}/{self.name}/round={round_no}"
+
+    def _staging(self, round_no: int) -> str:
+        return f"{self.root}/_staging/{self.name}/round={round_no}"
+
+    def _empty(self, kind: str) -> DataFrame:
+        return self.spark.createDataFrame([], self.schema).select(KIND_COLS[kind])
+
+    def _path(self, path: str):
+        return self.spark._jvm.org.apache.hadoop.fs.Path(path)
+
+    def _fs(self):
+        return self._path(self.root).getFileSystem(
+            self.spark._jsc.hadoopConfiguration()
+        )
+
+    def _read_json(self, path) -> dict:
+        io = self.spark._jvm.java.io
+        reader = io.BufferedReader(io.InputStreamReader(self._fs().open(path), "UTF-8"))
+        try:
+            return json.loads(reader.readLine())
+        finally:
+            reader.close()
 
 
-class CrawlRun:
-    """The four tables one crawl run maintains (SURVEY.md §1.3)."""
+class CrawlRun(RoundTable):
+    """The round table one crawl run commits into (SURVEY.md §1.3);
+    ``spans_type`` is the corpus's ``spans`` column type."""
 
-    def __init__(self, spark: SparkSession, root: str, catalog: str | None = None):
-        self.docs = RoundTable(spark, root, "docs", catalog)
-        self.admitted = RoundTable(spark, root, "admitted", catalog)
-        self.pending = RoundTable(spark, root, "pending", catalog)
-        self.log = RoundTable(spark, root, "log", catalog)
+    def __init__(
+        self,
+        spark: SparkSession,
+        root: str,
+        spans_type: T.DataType,
+        catalog: str | None = None,
+    ):
+        super().__init__(spark, root, "rounds", round_schema(spans_type), catalog)
 
 
 def write_bucketed_corpus(

@@ -4,9 +4,12 @@ The reference has no streaming; the crawl loop is a synchronous micro-batch
 analogue. The engine exposes its round outputs as streams so downstream
 consumers (chunkers, indexers, metric sinks) can attach incrementally:
 
-- `stream_crawled_docs`: readStream over the crawl run's per-round parquet
-  appends (`{table_dir}/docs/round=*`) — each completed round becomes one
-  micro-batch under Trigger.AvailableNow.
+- `stream_crawled_docs`: readStream over the ``docs`` rows of a durable
+  crawl's committed rounds (`{table_dir}/rounds/round=N/kind=docs`, see
+  plans/tables.py).  A round's files are written into a staging
+  directory and published by one rename, so the stream sees each
+  round's docs all at once, when the round commits — never half a round;
+  each committed round becomes one micro-batch under Trigger.AvailableNow.
 - `streaming_crawl_stats`: windowed per-status counts with a watermark —
   the A1 counter aggregation as an incremental query.
 - `foreachBatch` chunking: apply the chunker to each new round exactly-once.
@@ -33,12 +36,18 @@ CRAWLED_STREAM_SCHEMA = T.StructType(
 )
 
 
-def stream_crawled_docs(spark: SparkSession, table_dir: str) -> DataFrame:
-    """File-source stream over crawl round appends (one file-batch / round)."""
+def stream_crawled_docs(
+    spark: SparkSession, table_dir: str, **options
+) -> DataFrame:
+    """File-source stream over the docs of committed crawl rounds (one
+    file-batch / round); ``options`` go to the file source."""
+    rounds = f"{table_dir}/rounds"
     return (
         spark.readStream.schema(CRAWLED_STREAM_SCHEMA)
-        .option("basePath", f"{table_dir}/docs")
-        .parquet(f"{table_dir}/docs/round=*")
+        .options(basePath=rounds, **options)
+        .parquet(f"{rounds}/round=*/kind=docs")
+        # the path's `kind` partition column is docs throughout
+        .select(CRAWLED_STREAM_SCHEMA.fieldNames())
     )
 
 
@@ -149,11 +158,8 @@ def streaming_crawl_seen(
     pinned by tests/test_streaming.py::test_streaming_crawl_seen_equals_batch."""
     from .seen import stream_first_seen
 
-    src = (
-        spark.readStream.schema(CRAWLED_STREAM_SCHEMA)
-        .option("basePath", f"{table_dir}/docs")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(f"{table_dir}/docs/round=*")
+    src = stream_crawled_docs(
+        spark, table_dir, maxFilesPerTrigger=max_files_per_trigger
     )
     from ..functions.urls import host_of
 

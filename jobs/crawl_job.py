@@ -115,9 +115,11 @@ def main(argv: list[str], spark=None) -> int:
         from eget_spark.plans.crawl import CrawlResult, recrawl
         from eget_spark.plans.tables import CrawlRun
 
-        prior_run = CrawlRun(spark, args.table_dir, args.catalog)
-        prior_pages = prior_run.docs.read().drop("partition_id")
-        prior_order = prior_run.admitted.read()
+        prior_run = CrawlRun(
+            spark, args.table_dir, docs.schema["spans"].dataType, args.catalog
+        )
+        prior_pages = prior_run.read("docs").drop("partition_id")
+        prior_order = prior_run.read("admitted")
         prior = CrawlResult(
             pages=prior_pages,
             order=prior_order,

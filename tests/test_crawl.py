@@ -178,8 +178,8 @@ def test_crawl_resume_identical(spark, docs_small, robots_small, tmp_path):
     ]
     got_order = [
         (r["seq"], r["url"], r["depth"], r["parent_url"])
-        for r in spark.read.option("basePath", f"{d}/admitted")
-        .parquet(f"{d}/admitted/round=*")
+        for r in spark.read.option("basePath", f"{d}/rounds")
+        .parquet(f"{d}/rounds/round=*/kind=admitted")
         .orderBy("seq")
         .collect()
     ]
@@ -191,7 +191,9 @@ def test_crawl_resume_identical(spark, docs_small, robots_small, tmp_path):
     }
     resumed_pages = {
         (r["url"], r["status"])
-        for r in spark.read.option("basePath", f"{d}/docs").parquet(f"{d}/docs/round=*").collect()
+        for r in spark.read.option("basePath", f"{d}/rounds")
+        .parquet(f"{d}/rounds/round=*/kind=docs")
+        .collect()
     }
     assert resumed_pages == full_pages
     # the RETURNED handles must also cover pre-resume rounds (round-1 advice
