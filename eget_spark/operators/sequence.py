@@ -20,15 +20,19 @@ tiny broadcast DataFrame rather than embedded as ``create_map`` literals —
 literal maps change the generated code every round (different offsets =>
 janino recompile, ~1-2 s/round of pure driver stall in iterative callers);
 a broadcast join keeps the plan template identical across rounds so the
-whole-stage-codegen cache hits.
+whole-stage-codegen cache hits.  That DataFrame is a local relation
+(:func:`_local_table`): a ``LocalTableScan`` whose rows are data, so
+neither the generated code nor a Python worker depends on them.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..session import scoped_conf
@@ -65,6 +69,19 @@ class SeqResult:
 SEQ_SMALL_ROWS = 1 << 20
 
 _AQE_OFF = {"spark.sql.adaptive.enabled": "false"}
+_ARROW_ON = {"spark.sql.execution.arrow.pyspark.enabled": "true"}
+
+
+def _local_table(spark, cols: list[str], rows: list[tuple]) -> DataFrame:
+    """A bigint table of driver-side ``rows`` with columns ``cols``, planned
+    as a ``LocalTableScan``: the rows reach the JVM as one Arrow batch and
+    become a local relation, not a Python RDD that a job must evaluate.
+    (An inline ``VALUES`` table plans the same, but parsing it took ~6 s
+    for 100k rows.)"""
+    pdf = pd.DataFrame(rows, columns=cols, dtype="int64")
+    schema = T.StructType([T.StructField(c, T.LongType()) for c in cols])
+    with scoped_conf(spark, _ARROW_ON):
+        return spark.createDataFrame(pdf, schema)
 
 
 def _group_counts(parts: DataFrame, group_col: str) -> dict:
@@ -169,14 +186,7 @@ def with_global_seq(
     if not offsets:  # empty input: no rows, any typed constant works
         out = parts.withColumn(seq_col, F.lit(start).cast("long")).drop(group_col)
         return SeqResult(out, 0, held)
-    # ONE slice: the default parallelize splits this driver-local list
-    # into defaultParallelism Python tasks, so every broadcast build of
-    # the offsets paid a 32-task PythonRDD job (~275 ms/round measured
-    # in the crawl loop) for a list with one row per partition
-    off_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(offsets, 1),
-        f"{group_col} long, _off long",
-    )
+    off_df = _local_table(spark, [group_col, "_off"], offsets)
     w = Window.partitionBy(group_col).orderBy(*order_cols)
     out = (
         parts.join(F.broadcast(off_df), group_col)
@@ -274,10 +284,7 @@ def with_global_prefix_sums(
         seeds.append(tuple([pid] + list(acc)))
         acc = [a + (s or 0) for a, s in zip(acc, psums[pid])]
     totals = dict(zip(sum_cols, acc))
-    schema = ", ".join(
-        ["_pid long"] + [f"_off_{c} long" for c in sum_cols]
-    )
-    seed_df = spark.createDataFrame(seeds or [], schema)
+    seed_df = _local_table(spark, ["_pid"] + [f"_off_{c}" for c in sum_cols], seeds)
     w_in = (
         Window.partitionBy("_pid")
         .orderBy(*order_cols)

@@ -28,21 +28,28 @@ Scale notes (the 10^10 story):
   the corpus side then scans in bucket order with NO exchange (pinned by
   test_bucketed.py); only the frontier shuffles
 - seen membership: Bloom pre-filter + exact anti-join (seen.py)
-- plan lineage stays O(1) across rounds: in memory every round's state
-  ends in a localCheckpoint; with ``table_dir`` set (durable mode) each
-  round is committed in one write job carrying every row kind, its
-  counters come from an ``Observation`` on that write, and the next
-  round's frontier, seen, order and pages parts are read back from the
-  commit (protocol and layout: plans/tables.py; Iceberg with a catalog)
+- one round tail in both modes, which keeps plan lineage O(1) across
+  rounds: every round ends in ``_commit_round``, which tags the round's
+  rows by kind (emitted pages, admitted URLs, the next frontier) and
+  counts them with one ``Observation`` inside the one job that commits
+  them.  Every ``RoundStats`` field is that Observation plus driver
+  arithmetic, and the next round's frontier, seen, order and pages parts
+  are read from the commit.  The modes differ in that job only: with
+  ``table_dir`` set (durable mode) it writes the rows (protocol and
+  layout: plans/tables.py; Iceberg with a catalog); in memory it is one
+  eager localCheckpoint of them, minus the ok page rows, which stay in
+  the round's hits checkpoint
 """
 
 from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from ..functions.spans import assemble_markdown, link_targets
@@ -58,12 +65,16 @@ from ..operators.politeness import schedule_round
 from ..operators.seen import BloomFilter, anti_join_seen, build_bloom
 from ..operators.sequence import with_global_seq
 from ..operators.traps import url_template
-from .tables import FRONTIER_COLS, CrawlRun
+from .tables import FRONTIER_COLS, KIND_COLS, CrawlRun, kind_rows, round_schema
 
-_FRONTIER_SCHEMA = "url string, host string, depth int, parent_url string, seq long"
 PAGE_COLS = [
     "url", "host", "depth", "parent_url", "seq", "round", "status", "markdown", "spans",
 ]
+# frontier under this -> broadcast fetch join (measured: broadcasting a
+# 130k-row frontier costs ~1s while a shuffle join re-shuffles the
+# multi-GB span corpus every round); above it, pre-bucket the corpus on
+# doc_id so only the frontier side shuffles
+BROADCAST_FRONTIER_ROWS = 500_000
 
 
 @dataclass
@@ -124,11 +135,6 @@ class CrawlConfig:
     # delete for recrawl/expiry — operators/cuckoo.py). Same correctness
     # contract either way: prefilter + exact anti-join confirm.
     seen_filter: str = "bloom"
-    # frontier under this -> broadcast fetch join (measured: broadcasting a
-    # 130k-row frontier costs ~1s while a shuffle join re-shuffles the
-    # multi-GB span corpus every round); above it, pre-bucket the corpus
-    # on doc_id so only the frontier side shuffles
-    broadcast_rows: int = 500_000
     max_rounds: int = 10_000
     salt_threshold: int = 100_000
     # bounded per-URL fetch retries (SURVEY §2 mapping of the reference's
@@ -266,9 +272,13 @@ def crawl(
 ) -> CrawlResult:
     """Run a full crawl of the corpus graph; see module docstring.
 
-    With ``table_dir`` set, per-round state goes through the RoundTable
-    layer (plans/tables.py): parquet round-partitions by default, Iceberg
-    appends when ``catalog`` names a configured Iceberg catalog.
+    Seeds (round 0) and every round end the same way: one job commits the
+    round's rows, an Observation on that job yields its ``RoundStats``,
+    and the next round reads its state from the commit.  With
+    ``table_dir`` set that job is a write through the RoundTable layer
+    (plans/tables.py): parquet round partitions by default, Iceberg when
+    ``catalog`` names a configured Iceberg catalog.  Without it the job is
+    one eager ``localCheckpoint``.
 
     ``priorities`` — optional (url, priority) DataFrame (e.g. PageRank from
     operators/graph.py): under a constrained politeness budget, each host
@@ -292,11 +302,9 @@ def crawl(
     They pre-seed the seen set: any seed or discovered link hitting them
     is dropped by the normal anti-join.  Both caps budget THIS run's
     admissions; prior-run pages don't count against them."""
-    run = (
-        CrawlRun(spark, table_dir, docs.schema["spans"].dataType, catalog)
-        if table_dir
-        else None
-    )
+    spans_type = docs.schema["spans"].dataType
+    run = CrawlRun(spark, table_dir, spans_type, catalog) if table_dir else None
+    schema = round_schema(spans_type)  # of the rows each round commits
     if priorities is not None:
         # uniqueness guard: the table is arbitrary user parquet
         # (jobs/crawl_job.py --priorities); duplicate urls would multiply
@@ -368,13 +376,8 @@ def crawl(
             bucket_expr=F.floor(F.col("order") / F.lit(1024)),
         )
         frontier = sr0.df.where(F.col("seq") < config.max_pages).select(FRONTIER_COLS)
-        if run:
-            frontier, frontier_count = _commit_seeds(spark, run, frontier, 1)
-            sr0.unpersist()
-        else:
-            frontier = _checkpoint(frontier)
-            sr0.unpersist()
-            frontier_count = frontier.count()
+        frontier, frontier_count = _commit_seeds(spark, run, schema, frontier, 1)
+        sr0.unpersist()
         seen_parts = (
             [prior_seen.select("url")] if prior_seen is not None else []
         ) + [frontier.select("url")]
@@ -403,37 +406,25 @@ def crawl(
                 _hc[h] = _hc.get(h, 0) + 1
             kept.append(u)
         seeds = [
-            (u, None, 0, None, i)
+            (u, 0, None, i)
             for i, u in enumerate(kept)
             if 0 <= config.max_depth
         ]
-        # slice count scaled to the seed list (not defaultParallelism):
-        # the checkpointed seed frame is round 0's seen part, re-scanned
-        # by EVERY later round's seen union — 32 near-empty partitions
-        # cost 32 scheduled tasks per round for a handful of seeds
-        n_slices = max(1, min(
-            spark.sparkContext.defaultParallelism, len(seeds) // 1000
-        ))
         frontier = spark.createDataFrame(
-            spark.sparkContext.parallelize(
-                [(u, d, p, s) for (u, _, d, p, s) in seeds], n_slices
-            ),
-            "url string, depth int, parent_url string, seq long",
+            seeds, "url string, depth int, parent_url string, seq long"
         ).withColumn("host", host_of(F.col("url"))).select(FRONTIER_COLS)
-        if run:
-            frontier, _ = _commit_seeds(spark, run, frontier, len(seeds))
-        else:
-            frontier = _checkpoint(frontier)
+        frontier, frontier_count = _commit_seeds(
+            spark, run, schema, frontier, len(seeds)
+        )
         # `seen` is kept as a union of per-round checkpointed parts — no
         # O(|seen|) re-materialization per round (the Iceberg-append shape)
         seen_parts: list[DataFrame] = [frontier.select("url")]
-        admitted_total = len(seeds)
+        admitted_total = frontier_count
         success_total = 0
         round_no = 0
         stats: list[RoundStats] = []
         pages_parts: list[DataFrame] = []
         order_parts: list[DataFrame] = [frontier.withColumn("round", F.lit(0))]
-        frontier_count = len(seeds)
     else:
         (
             frontier, frontier_count, seen0, admitted_total, success_total,
@@ -501,23 +492,17 @@ def crawl(
         bloom = build_filter(seen_df(), bloom_expected(admitted_total))
 
     # politeness applies only if some host actually has a crawl delay
-    if robots_f is not None and robots_f.where(F.col("crawl_delay") > 0).limit(1).count() == 0:
+    if robots_f is not None and robots_f.where(F.col("crawl_delay") > 0).isEmpty():
         politeness_robots = None
     else:
         politeness_robots = robots_f
 
-    hits_parts: list[DataFrame] = []
-    fetch_parts: list[DataFrame] = []  # in-memory mode: for the final misses anti-join
     retry_ledger: DataFrame | None = None  # (url, _attempt) for in-flight retries
-    attempted_list: list[int] = []
-    success_list: list[int | None] = []
-    counted = 0
-    pending_sr = None  # prev round's sequencing persist, freed once consumed
 
     while frontier_count > 0 and success_total < config.max_pages and round_no < config.max_rounds:
         round_no += 1
         t0 = time.monotonic()
-        committed_sr = None  # durable mode: sequencing persist the commit reads
+        sr = None  # this round's sequencing persist, freed after the commit
 
         # trap-host residual throttle: flagged hosts become synthetic
         # politeness entries with delay round_window/(budget+0.5), i.e.
@@ -567,13 +552,11 @@ def crawl(
 
         # J1: fetch = join frontier against the corpus ("the corpus IS the
         # network"); broadcast the frontier side when small
-        if frontier_count <= config.broadcast_rows:
+        small_frontier = frontier_count <= BROADCAST_FRONTIER_ROWS
+        if small_frontier:
             hits = docs.join(
                 F.broadcast(fetch_now), docs["doc_id"] == fetch_now["url"], "inner"
             ).drop("doc_id")
-            misses = fetch_now.join(
-                F.broadcast(hits.select("url")), "url", "left_anti"
-            )
         else:
             joined = fetch_now.join(docs, fetch_now["url"] == docs["doc_id"], "left")
             hits = joined.where(F.col("doc_id").isNotNull()).drop("doc_id")
@@ -586,6 +569,11 @@ def crawl(
         hits = hits.select(
             "url", fetch_now["host"], "depth", "parent_url", "seq", "spans"
         ).localCheckpoint(eager=False)
+        if small_frontier:
+            # probes the checkpoint, not a second fetch join
+            misses = fetch_now.join(
+                F.broadcast(hits.select("url")), "url", "left_anti"
+            )
 
         # bounded retries: missed URLs re-enqueue (same frontier row, same
         # seq) until attempted 1+max_retries times; deferred URLs keep
@@ -620,72 +608,27 @@ def crawl(
                     )
                 )
             retry_ledger = new_ledger
-        if run is None:
-            # without politeness the whole frontier is fetched: no extra job
-            attempted = fetch_now.count() if politeness_active else frontier_count
-            attempted_list.append(attempted)
-            hits_parts.append(hits)
-            success_list.append(None)
-            # success counting is DEFERRED while the page cap cannot
-            # possibly bind (true success_total <= admitted_total <
-            # max_pages), saving a job per round; durable mode observes
-            # both counters on the round's commit instead
-            if admitted_total >= config.max_pages:
-                while counted < len(hits_parts):
-                    c = hits_parts[counted].count()
-                    success_list[counted] = c
-                    success_total += c
-                    counted += 1
-            success = success_list[-1]
-            failed = attempted - success if success is not None else None
-
-        # S6: emitted page rows.  Markdown (X7) is assembled later in ONE
-        # projection: over the final union in memory, over each round's
-        # commit in durable mode — a per-round column would plan one
-        # ArrowEvalPython node per union branch, and every consumer task
-        # then opens a Python channel per branch it reads: measured 2x on
-        # the 30k-page markdown pass
-        if run:
-            # (kinds, rows, columns) parts of the round's commit
-            pid = F.spark_partition_id()
-            emitted = [
-                (("docs",), hits, {"status": F.lit("ok"), "partition_id": pid}),
-                (
-                    ("docs",), exhausted,
-                    {"status": F.lit("missing"), "partition_id": pid},
-                ),
-            ]
-        else:
-            # LAZY over the checkpointed hits/frontier — markdown assembly
-            # (the heaviest UDF) runs once over the final union instead of
-            # once per round; misses resolved by ONE end-of-crawl anti-join
-            # instead of a driver-serial broadcast build per round
-            pages_parts.append(
-                hits.select(
-                    "url", "host", "depth", "parent_url", "seq",
-                    F.lit(round_no).alias("round"),
-                    F.lit("ok").alias("status"),
-                    "spans",
-                )
-            )
-            fetch_parts.append(
-                fetch_now.select(*FRONTIER_COLS, F.lit(round_no).alias("round"))
-            )
-
-        if admitted_total >= config.max_pages:
-            # page budget exhausted: no candidate can pass the seq <
-            # max_pages admission gate, so skip harvest/normalize/dedup/
-            # sequencing for the remaining politeness-drain rounds
+        # S6: the round's rows, tagged by kind — emitted pages (fetch hits
+        # and exhausted misses), admitted URLs and the next frontier —
+        # committed by _commit_round, whose Observation yields every
+        # counter.  Markdown (X7) is assembled in ONE projection: over the
+        # final union in memory, over each round's commit in durable mode
+        # — a per-round column would plan one ArrowEvalPython node per
+        # union branch, and every consumer task then opens a Python
+        # channel per branch it reads: measured 2x on the 30k-page
+        # markdown pass
+        pid = "spark_partition_id()"
+        parts = [
+            (("docs",), hits, {"status": "'ok'", "partition_id": pid}),
+            (("docs",), exhausted, {"status": "'missing'", "partition_id": pid}),
+        ]
+        n_admitted = 0
+        if admitted_total < config.max_pages:
+            # once the page budget is exhausted no candidate can pass the
+            # seq < max_pages admission gate, so the remaining politeness-
+            # drain rounds skip harvest/normalize/dedup/sequencing
             # (measured: ~20 s/round at the 30k-page bench once the cap
-            # binds). Materialize the previous round's deferred admitted
-            # checkpoint first — no other job this round would.
-            if pending_sr is not None:
-                frontier.count()
-                pending_sr.unpersist()
-                pending_sr = None
-            admitted = spark.createDataFrame([], _FRONTIER_SCHEMA)
-            n_admitted = 0
-        else:
+            # binds)
             # X1 + F1-F5: harvest, normalize, filter
             parents = hits.where(F.col("depth") < config.max_depth)
             kids = parents.select(
@@ -786,7 +729,8 @@ def crawl(
 
             # F7 + O1: global admission sequence; admit while seq < max_pages.
             # The sequencing collect also yields the candidate total, so
-            # n_admitted = clamp(cap headroom) — no extra count job.
+            # n_admitted = clamp(cap headroom) bounds the commit's partition
+            # count; the round's counters come from the commit.
             # bucket = floor(parent_seq / 1024): monotone in the leading order
             # key, so per-bucket ranks + bucket prefix offsets give the exact
             # global rank with ONE hash exchange — no range-bound sampling pass
@@ -799,12 +743,6 @@ def crawl(
                 num_partitions=_seq_partitions(spark, frontier_count),
                 bucket_expr=F.floor(F.col("parent_seq") / F.lit(1024)),
             )
-            # the sequencing job above also materialized the PREVIOUS round's
-            # deferred admitted checkpoint (it is this round's frontier/seen
-            # input) — its sequencing persist can be freed now
-            if pending_sr is not None:
-                pending_sr.unpersist()
-                pending_sr = None
             admitted = sr.df.where(F.col("seq") < config.max_pages).select(
                 F.col("url"),
                 host_of(F.col("url")).alias("host"),
@@ -812,51 +750,42 @@ def crawl(
                 F.col("base").alias("parent_url"),
                 F.col("seq"),
             )
-            if run is not None:
-                # durable mode: the round's commit below writes `admitted`
-                # straight from the sequencing persist, then frees it
-                committed_sr = sr
-            elif not politeness_active:
-                # in-memory fast path: defer materialization — the checkpoint
-                # computes inside the NEXT round's sequencing job (one job per
-                # round instead of two); politeness mode materializes now
-                # (its per-round counts need it anyway)
-                admitted = admitted.localCheckpoint(eager=False)
-                pending_sr = sr
-            else:
-                admitted = _checkpoint(admitted)
-                sr.unpersist()
+            parts.append((("admitted", "pending"), admitted, {}))
             n_admitted = min(sr.total, max(0, config.max_pages - admitted_total))
-        if run:
-            # ONE write job commits the round; its counters come from the
-            # write's Observation, and the next round's state is read back
-            # from the commit instead of checkpointed and counted
-            parts = [*emitted, (("admitted", "pending"), admitted, {})]
-            if retry_next is not None:
-                parts.append((("pending",), retry_next, {"_src": F.lit("retry")}))
-            if politeness_active:
-                parts.append((("pending",), deferred, {"_src": F.lit("deferred")}))
-            logged = _commit_round(
-                spark, run, round_no, parts,
-                frontier_count + n_admitted, admitted_total, success_total,
+        if retry_next is not None:
+            parts.append((("pending",), retry_next, {"_src": "'retry'"}))
+        if politeness_active:
+            parts.append((("pending",), deferred, {"_src": "'deferred'"}))
+        # ONE job commits the round; the next round's state is read back
+        # from the commit instead of checkpointed and counted
+        logged, committed = _commit_round(
+            spark, run, schema, round_no, parts,
+            frontier_count + n_admitted, admitted_total, success_total,
+        )
+        if sr is not None:
+            sr.unpersist()
+        admitted = committed("admitted")
+        frontier = committed("pending")
+        frontier_count = logged["pending"]
+        n_admitted = logged["admitted"]
+        admitted_total = logged["admitted_total"]
+        success_total = logged["success_total"]
+        pages_parts.append(
+            committed("docs").selectExpr(
+                *FRONTIER_COLS, f"{round_no} AS round", *PAGE_COLS[6:]
             )
-            if committed_sr is not None:
-                committed_sr.unpersist()
-            admitted = run.read_round(round_no, "admitted")
-            frontier = run.read_round(round_no, "pending")
-            frontier_count = logged["pending"]
+        )
+        if run is None:
+            # in memory the ok page rows stay in the round's hits checkpoint
             pages_parts.append(
-                run.read_round(round_no, "docs")
-                .withColumn("round", F.lit(round_no))
-                .select(PAGE_COLS)
+                hits.selectExpr(
+                    *FRONTIER_COLS, f"{round_no} AS round", "'ok' AS status",
+                    "CAST(NULL AS string) AS markdown", "spans",
+                )
             )
-            attempted, success = logged["attempted"], logged["success"]
-            failed, n_deferred = logged["failed"], logged["deferred"]
-            success_total = logged["success_total"]
-        admitted_total += n_admitted
         if bloom is not None and n_admitted > 0:
             # distributed delta: same shape as the running filter, built
-            # over the checkpointed admitted set and merged — only shard
+            # over the committed admitted set and merged — only shard
             # tables / bit chunks reach the driver, never URLs (verdict
             # fix #1). Once the filter saturates rebuild larger.
             if not bloom.saturated(admitted_total):
@@ -864,7 +793,6 @@ def crawl(
             else:
                 bloom = None  # saturated: rebuild distributed from seen below
         if n_admitted > 0:
-            # admitted is checkpointed (durable mode: read from the commit)
             seen_parts.append(admitted.select("url"))
             if len(seen_parts) > config.seen_compact_parts:
                 seen_parts = [_checkpoint(_union_all(seen_parts))]
@@ -882,93 +810,15 @@ def crawl(
         if n_admitted > 0:
             order_parts.append(admitted.withColumn("round", F.lit(round_no)))
 
-        if run is None:
-            n_retry = 0
-            if retry_next is not None:
-                parts = [admitted, retry_next]
-                if politeness_active:
-                    parts.append(deferred.select(FRONTIER_COLS))
-                frontier = _checkpoint(_union_all(parts))
-                frontier_count = frontier.count()
-                # m_att is checkpointed: this count reuses it, no recompute
-                n_retry = retry_next.count()
-            elif politeness_active:
-                frontier = _checkpoint(deferred.select(FRONTIER_COLS).unionByName(admitted))
-                frontier_count = frontier.count()
-            else:
-                # no deferrals possible: the new frontier IS the admitted set
-                # (already checkpointed) — saves a materialization + count
-                frontier = admitted
-                frontier_count = n_admitted
-            n_deferred = frontier_count - n_admitted - n_retry
-
         stats.append(
             RoundStats(
-                round_no, attempted, success, failed, n_admitted, n_deferred,
-                admitted_total, success_total, time.monotonic() - t0,
+                round_no, logged["attempted"], logged["success"], logged["failed"],
+                n_admitted, logged["deferred"], admitted_total, success_total,
+                time.monotonic() - t0,
             )
         )
 
-    if pending_sr is not None:
-        # last round's admitted never flowed into a next-round job: force
-        # its checkpoint (usually empty — the loop exited) then free
-        admitted.count()
-        pending_sr.unpersist()
-
-    # fill any deferred per-round success counts in ONE batched job
-    success_total += _fill_success_counts(success_list, hits_parts)
-    run_success = 0
-    for i, st in enumerate(stats[len(stats) - len(hits_parts):]):
-        st.success = success_list[i]
-        st.failed = attempted_list[i] - success_list[i]
-    base = stats[len(stats) - len(hits_parts) - 1].success_total if len(stats) > len(hits_parts) else 0
-    run_success = base
-    for st in stats[len(stats) - len(hits_parts):]:
-        run_success += st.success
-        st.success_total = run_success
-
-    # the per-round success counts are final here (_fill_success_counts
-    # above), so a crawl where every attempted URL hit provably has no
-    # missing rows: skip the whole fetched-vs-hits anti-join (it scans
-    # rounds x corpus-partitions mostly-empty union legs — measured
-    # ~1.5 s at the 30k-page bench for an empty result)
-    if fetch_parts and sum(attempted_list) == sum(s or 0 for s in success_list):
-        fetch_parts = []
-    if fetch_parts:
-        # shuffle-free coalesce of both union sides before the anti-join:
-        # same rounds-x-partitions task-overhead argument as `pages` below
-        n_co = 2 * spark.sparkContext.defaultParallelism
-        all_fetched = _union_all(fetch_parts).coalesce(n_co)
-        all_hits = _union_all([h.select("url") for h in hits_parts]).coalesce(n_co)
-        misses_all = all_fetched.join(all_hits, "url", "left_anti")
-        if config.max_retries > 0:
-            # a retried URL appears once per attempt (distinct rounds);
-            # collapse to one missing row at its LAST attempt round — the
-            # non-retry columns are invariant across re-enqueues
-            misses_all = misses_all.groupBy(*FRONTIER_COLS).agg(
-                F.max("round").alias("round")
-            )
-            # URLs whose retries are still IN FLIGHT when the crawl
-            # terminates (budget/round caps) emit NO missing row — the
-            # same contract as table mode, where a missing row only
-            # emits at exhaustion (in-flight work lives in pending)
-            if retry_ledger is not None:
-                misses_all = misses_all.join(
-                    retry_ledger.where(
-                        F.col("_attempt") <= config.max_retries
-                    ).select("url"),
-                    "url",
-                    "left_anti",
-                )
-        pages_parts.append(
-            misses_all.select(
-                "url", "host", "depth", "parent_url", "seq", "round",
-                F.lit("missing").alias("status"),
-                F.lit(None).cast(docs.schema["spans"].dataType).alias("spans"),
-            )
-        )
-    pages = _union_all(pages_parts) if pages_parts else None
-    if pages is not None:
+    if pages_parts:
         # the union stacks every round's checkpoint partitions (rounds x
         # corpus partitions — 455 for the 30k-page bench), so consumers
         # pay per-task overhead (and the markdown pandas UDF a Python
@@ -976,23 +826,20 @@ def crawl(
         # coalesce to 2x cluster parallelism (coalesce never increases a
         # smaller count, and on a real cluster defaultParallelism scales
         # with the executor fleet)
-        pages = pages.coalesce(2 * spark.sparkContext.defaultParallelism)
+        pages = _union_all(pages_parts).coalesce(
+            2 * spark.sparkContext.defaultParallelism
+        )
         if run is None:
-            # single markdown projection over the coalesced union (see
-            # the _ok_rows note); assemble_markdown(NULL spans) is NULL,
-            # so miss rows come out identical to the literal-NULL form
-            pages = pages.select(
-                "url", "host", "depth", "parent_url", "seq", "round",
-                "status",
-                assemble_markdown(F.col("spans")).alias("markdown"),
-                "spans",
-            )
-    if not pages_parts:
-        pages = spark.createDataFrame(
-            [],
-            "url string, host string, depth int, parent_url string, seq long, "
-            "round int, status string, markdown string",
-        ).withColumn("spans", F.lit(None).cast(docs.schema["spans"].dataType))
+            # single markdown projection over the coalesced union;
+            # assemble_markdown(NULL spans) is NULL, so miss rows come
+            # out identical to the literal-NULL form
+            pages = pages.withColumn("markdown", assemble_markdown(F.col("spans")))
+    else:
+        pages = (
+            spark.createDataFrame([], schema)
+            .withColumn("round", F.lit(None).cast("int"))
+            .select(PAGE_COLS)
+        )
     order = _union_all(order_parts)
     return CrawlResult(
         pages=pages,
@@ -1001,29 +848,6 @@ def crawl(
         stats=stats,
         bloom_bits=bloom.bit_size() if bloom is not None else None,
     )
-
-
-def _fill_success_counts(
-    success_list: list[int | None], hits_parts: list[DataFrame]
-) -> int:
-    """Count every still-uncounted round's hits in one union+groupBy job
-    (one count ROW per round reaches the driver, never data rows); returns
-    the total added."""
-    missing = [i for i, s in enumerate(success_list) if s is None]
-    if not missing:
-        return 0
-    tagged = _union_all(
-        [hits_parts[i].select(F.lit(i).alias("_i")) for i in missing]
-    )
-    got = {
-        r["_i"]: r["n"]
-        for r in tagged.groupBy("_i").agg(F.count("*").alias("n")).collect()
-    }
-    added = 0
-    for i in missing:
-        success_list[i] = got.get(i, 0)
-        added += success_list[i]
-    return added
 
 
 def _union_all(parts: list[DataFrame]) -> DataFrame:
@@ -1035,53 +859,53 @@ def _union_all(parts: list[DataFrame]) -> DataFrame:
 
 def _commit_round(
     spark: SparkSession,
-    run: CrawlRun,
+    run: CrawlRun | None,
+    schema: StructType,
     round_no: int,
     parts: list[tuple[tuple[str, ...], DataFrame, dict]],
     row_bound: int,
     admitted_before: int,
     success_before: int,
-) -> dict:
-    """Commit one durable round (plans/tables.py) in ONE write job and
-    return its log row.  ``parts`` are (kinds, rows, columns): the rows
-    are written once per kind from one scan (admitted rows are also the
+) -> tuple[dict, Callable[[str], DataFrame]]:
+    """End one crawl round: build its rows, tag them by kind, count them
+    with one Observation inside the one job that commits them, and return
+    the round's log row plus a reader of its rows by kind.
+
+    ``parts`` are (kinds, rows, columns): the rows become rows of
+    ``schema`` once per kind from one scan (admitted rows are also the
     next round's pending ones), with ``columns`` overriding row columns;
     a ``_src`` column (retry or deferred) marks pending rows for the
-    counters only.  An Observation gathers every counter on the write
-    itself: attempted = successes + exhausted misses + retries.  The
-    write's partition count comes from ``row_bound`` (rows the driver
-    knows the round holds at most), so a request-sized round writes one
-    file per kind."""
+    counters only.  Every counter comes from the Observation: attempted =
+    successes + exhausted misses + retries.  The partition count comes
+    from ``row_bound`` (rows the driver knows the round holds at most), so
+    a request-sized round commits one partition per kind.
+
+    With ``run`` (durable) the rows are written in one job and read back
+    from the commit (plans/tables.py).  In memory they are checkpointed
+    in one eager job, minus the ok page rows: the Observation counts those
+    before the ``where``, and they stay in the round's hits checkpoint, so
+    no later seen union rescans their spans.  The checkpoint must be eager:
+    an Observation on a lazy one reports 0."""
     obs = Observation()
-
-    def n(cond):
-        return F.count(F.when(cond, 1))
-
+    counters = {
+        "admitted": "kind = 'admitted'",
+        "pending": "kind = 'pending'",
+        "success": "status = 'ok'",
+        "exhausted": "status = 'missing'",
+        "retry": "_src = 'retry'",
+        "deferred": "_src = 'deferred'",
+    }
     rows = (
         _union_all(
             [
-                run.rows(df, *kinds, **{"_src": F.lit(None).cast("string"), **cols})
+                kind_rows(schema, df, *kinds, **{"_src": "CAST(NULL AS string)", **cols})
                 for kinds, df, cols in parts
             ]
         )
-        .observe(
-            obs,
-            n(F.col("kind") == "admitted").alias("admitted"),
-            n(F.col("kind") == "pending").alias("pending"),
-            n(F.col("status") == "ok").alias("success"),
-            n(F.col("status") == "missing").alias("exhausted"),
-            n(F.col("_src") == "retry").alias("retry"),
-            n(F.col("_src") == "deferred").alias("deferred"),
-        )
+        .observe(obs, *[F.expr(f"count_if({c}) AS {k}") for k, c in counters.items()])
         .drop("_src")
         .coalesce(_seq_partitions(spark, row_bound))
     )
-    if any("docs" in kinds for kinds, _, _ in parts):
-        # one markdown projection over the coalesced rows: per docs input
-        # partition it would cost a Python round-trip each, serially in
-        # the coalesced task; NULL spans (every non-docs and miss row)
-        # assemble to NULL
-        rows = rows.withColumn("markdown", assemble_markdown(F.col("spans")))
 
     def log() -> dict:
         m = obs.get
@@ -1098,19 +922,36 @@ def _commit_round(
             "pending": m["pending"],  # the next frontier's size
         }
 
-    return run.append(rows, round_no, log)
+    if run is None:
+        kept = _checkpoint(rows.where("NOT (status <=> 'ok')"))
+
+        def read(kind: str) -> DataFrame:
+            return kept.where(f"kind = '{kind}'").select(KIND_COLS[kind])
+
+        return log(), read
+    if any("docs" in kinds for kinds, _, _ in parts):
+        # one markdown projection over the coalesced rows: per docs input
+        # partition it would cost a Python round-trip each, serially in
+        # the coalesced task; NULL spans (every non-docs and miss row)
+        # assemble to NULL
+        rows = rows.withColumn("markdown", assemble_markdown(F.col("spans")))
+    return run.append(rows, round_no, log), lambda kind: run.read_round(round_no, kind)
 
 
 def _commit_seeds(
-    spark: SparkSession, run: CrawlRun, seeds: DataFrame, row_bound: int
+    spark: SparkSession,
+    run: CrawlRun | None,
+    schema: StructType,
+    seeds: DataFrame,
+    row_bound: int,
 ) -> tuple[DataFrame, int]:
-    """Round 0 of a durable crawl: commit the admitted seeds as both
-    ``admitted`` and ``pending``; returns the frontier read back from the
-    commit and its size."""
-    logged = _commit_round(
-        spark, run, 0, [(("admitted", "pending"), seeds, {})], row_bound, 0, 0
+    """Round 0: commit the admitted seeds as both ``admitted`` and
+    ``pending``; returns the frontier read back from the commit and its
+    size."""
+    logged, committed = _commit_round(
+        spark, run, schema, 0, [(("admitted", "pending"), seeds, {})], row_bound, 0, 0
     )
-    return run.read_round(0, "pending"), logged["pending"]
+    return committed("pending"), logged["pending"]
 
 
 def _load_state(run: CrawlRun):

@@ -57,7 +57,7 @@ import json
 import os
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -86,6 +86,33 @@ def round_schema(spans_type: T.DataType) -> T.StructType:
             T.StructField("partition_id", T.IntegerType()),
         ]
     )
+
+
+def kind_rows(
+    schema: T.StructType, df: DataFrame, *kinds: str, **cols: str
+) -> DataFrame:
+    """``df`` as round rows of ``schema``, once per kind in ``kinds`` from
+    one scan of ``df``: the row columns (``cols`` first, then ``df``'s,
+    else typed NULL), any other ``cols``, and ``kind``.  ``cols`` are SQL
+    expressions, so the rows take one ``selectExpr`` and no Column call
+    (each of those costs the driver milliseconds, once per crawl round)."""
+    have, rest = set(df.columns), dict(cols)
+
+    def expr(f: T.StructField) -> str:
+        # aliased even when kept as is: a fresh attribute, so a crawl
+        # that reads its next frontier from these rows and joins it with
+        # this round's inputs joins no attribute with itself
+        if f.name in have and f.name not in rest:
+            return f"`{f.name}` AS `{f.name}`"
+        e = rest.pop(f.name, "NULL")
+        return f"CAST({e} AS {f.dataType.simpleString()}) AS `{f.name}`"
+
+    row = [expr(f) for f in schema]
+    extra = [f"{e} AS `{name}`" for name, e in rest.items()]
+    kind = ", ".join(f"'{k}'" for k in kinds)
+    if len(kinds) > 1:
+        kind = f"explode(array({kind}))"
+    return df.selectExpr(*row, *extra, f"{kind} AS kind")
 
 
 def _extend(schema: T.StructType, *fields: tuple) -> T.StructType:
@@ -126,26 +153,6 @@ class RoundTable:
                 )
 
     # -- write ---------------------------------------------------------------
-
-    def rows(self, df: DataFrame, *kinds: str, **cols: Column) -> DataFrame:
-        """``df`` as rows of this table, once per kind in ``kinds`` from one
-        scan of ``df``: the row columns (``cols`` first, then ``df``'s,
-        else typed NULL), any other ``cols``, and ``kind``."""
-        have, rest = set(df.columns), dict(cols)
-
-        def col(f: T.StructField) -> Column:
-            if f.name in rest:
-                return rest.pop(f.name).cast(f.dataType)
-            if f.name in have:
-                return F.col(f.name)
-            return F.lit(None).cast(f.dataType)
-
-        row = [col(f).alias(f.name) for f in self.schema]
-        extra = [c.alias(name) for name, c in rest.items()]
-        kind = F.lit(kinds[0])
-        if len(kinds) > 1:
-            kind = F.explode(F.array(*map(F.lit, kinds)))
-        return df.select(*row, *extra, kind.alias("kind"))
 
     def append(
         self, rows: DataFrame, round_no: int, log: Callable[[], dict]

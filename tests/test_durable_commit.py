@@ -6,9 +6,15 @@
   seen set, pages (no round written twice) and RoundStats.  Runs on the
   parquet backend and on a stubbed Iceberg catalog that really stores
   rows, where a plain ``append()`` would duplicate a re-run round's docs.
+- Parity: a durable crawl returns the same pages, order, seen set and
+  RoundStats as the in-memory crawl (both end each round in the same
+  tagged, observed row set), with politeness deferrals, with retries and
+  with a per-host cap; and both sides of the broadcast fetch-join gate
+  give the same result in both modes.
 - Job budget: a two-round durable crawl commits through exactly
   ``rounds + 1`` ``RoundTable.append`` calls, its read-backs run no Spark
-  job, and the whole crawl stays under a pinned job ceiling.
+  job, and the whole crawl stays under a pinned job ceiling; a two-round
+  in-memory crawl stays under its own ceiling and runs no ``count()``.
 """
 
 from __future__ import annotations
@@ -17,6 +23,7 @@ import os
 
 import pytest
 
+import eget_spark.plans.crawl as plan_crawl
 from eget_spark.plans.crawl import CrawlConfig, crawl
 from eget_spark.plans.tables import CrawlRun, RoundTable
 from eget_spark.synth import doc_url
@@ -29,6 +36,19 @@ CRASH_ROUND = 1
 # each row kind was its own write and round state was checkpointed and
 # counted); one more job per round breaks the ceiling
 JOB_CEILING = 24
+# Spark jobs of the same crawl in memory, on local[4]: 18, warm or not
+# (29-30 when each round also ran fetch-count, frontier-checkpoint and
+# frontier-count jobs); one more job per round breaks the ceiling
+MEMORY_JOB_CEILING = 18
+# config variants the durable and in-memory crawls must agree on, beyond
+# CFG itself; robots_small gives host 2 a 0.5 s crawl delay, so a crawl
+# of that host with a 1 s round window fetches 2 pages a round and defers
+# the rest
+PARITY = {
+    "retries": dict(max_retries=1),
+    "host_cap": dict(max_pages_per_host=5),
+    "deferrals": dict(seed_urls=[doc_url(2, 0)], max_pages=8, round_window=1.0),
+}
 
 
 class _Crash(Exception):
@@ -93,11 +113,11 @@ class _StubWriter:
         self.df.write.partitionBy(*self.cols).parquet(self.path)
 
 
-def _crawl(spark, docs, robots, table_dir, catalog, monkeypatch, **kw):
+def _crawl(spark, docs, robots, table_dir, catalog, monkeypatch, cfg=CFG, **kw):
     if catalog is not None:
         _install_iceberg_stub(spark, monkeypatch, os.path.join(table_dir, "warehouse"))
     return crawl(
-        spark, docs, CrawlConfig(**CFG), robots=robots,
+        spark, docs, CrawlConfig(**cfg), robots=robots,
         table_dir=table_dir, catalog=catalog, **kw,
     )
 
@@ -110,28 +130,32 @@ def _stats(res):
     ]
 
 
-def _outcome(spark, docs, res, table_dir, catalog):
-    """Everything a resumed crawl must reproduce: admission order, seen
-    set, the committed docs rows (a list, so a duplicated round shows),
-    the returned pages and the per-round counters."""
-    run = CrawlRun(spark, table_dir, docs.schema["spans"].dataType, catalog)
-    committed = sorted(
-        (r["url"], r["status"], r["round"])
-        for r in run.read("docs").collect()
-    )
+def _returned(res):
+    """What a crawl returns: admission order, seen set, pages (a list, so
+    a duplicated row shows) and the per-round counters."""
     return {
         "order": sorted(
             (r["seq"], r["url"], r["depth"], r["parent_url"])
             for r in res.order.collect()
         ),
         "seen": sorted(r["url"] for r in res.seen.collect()),
-        "docs": committed,
         "pages": sorted(
             (r["url"], r["status"], r["round"], r["markdown"])
             for r in res.pages.collect()
         ),
         "stats": _stats(res),
     }
+
+
+def _outcome(spark, docs, res, table_dir, catalog):
+    """Everything a resumed crawl must reproduce: what it returns plus the
+    committed docs rows (a list, so a duplicated round shows)."""
+    run = CrawlRun(spark, table_dir, docs.schema["spans"].dataType, catalog)
+    committed = sorted(
+        (r["url"], r["status"], r["round"])
+        for r in run.read("docs").collect()
+    )
+    return {**_returned(res), "docs": committed}
 
 
 @pytest.fixture(
@@ -151,11 +175,57 @@ def backend(request, spark, docs_small, robots_small, tmp_path_factory):
         spark.conf.unset(f"spark.sql.catalog.{catalog}")
 
 
-def test_durable_stats_equal_in_memory(spark, docs_small, robots_small, backend):
-    _, want = backend
+def test_durable_stats_equal_in_memory(
+    spark, docs_small, robots_small, backend, tmp_path, monkeypatch
+):
+    """Pages, order, seen and RoundStats of a durable crawl equal the
+    in-memory crawl's, for CFG and each PARITY variant."""
+    catalog, want = backend
     assert len(want["stats"]) > CRASH_ROUND + 1  # rounds follow the crash
     in_memory = crawl(spark, docs_small, CrawlConfig(**CFG), robots=robots_small)
     assert want["stats"] == _stats(in_memory)
+    got = _returned(in_memory)
+    for key in ("order", "seen", "pages"):
+        assert got[key] == want[key], key
+    for name, extra in PARITY.items():
+        cfg = {**CFG, **extra}
+        durable = _returned(
+            _crawl(
+                spark, docs_small, robots_small, str(tmp_path / name), catalog,
+                monkeypatch, cfg=cfg,
+            )
+        )
+        in_memory = _returned(
+            crawl(spark, docs_small, CrawlConfig(**cfg), robots=robots_small)
+        )
+        for key in durable:
+            assert durable[key] == in_memory[key], (name, key)
+        if name == "deferrals":
+            assert any(s[5] > 0 for s in durable["stats"])  # it did defer
+
+
+@pytest.mark.parametrize("durable", [False, True], ids=["in_memory", "durable"])
+def test_shuffle_fetch_join_equals_broadcast(
+    spark, docs_small, robots_small, tmp_path, monkeypatch, durable
+):
+    """Both sides of the fetch join's size gate: with no frontier small
+    enough to broadcast, every round takes the shuffle join and the crawl
+    returns what the broadcast join gives."""
+
+    def run(name):
+        d = str(tmp_path / name) if durable else None
+        res = crawl(
+            spark, docs_small, CrawlConfig(**CFG, max_retries=1),
+            robots=robots_small, table_dir=d,
+        )
+        return _returned(res)
+
+    broadcast = run("broadcast")
+    monkeypatch.setattr(plan_crawl, "BROADCAST_FRONTIER_ROWS", 0)
+    shuffled = run("shuffle")
+    assert any(s[3] > 0 for s in broadcast["stats"])  # a round had misses
+    for key in broadcast:
+        assert shuffled[key] == broadcast[key], key
 
 
 @pytest.mark.parametrize("step", list(STEPS))
@@ -233,3 +303,30 @@ def test_durable_crawl_job_budget(
     assert tracker.getJobIdsForGroup(read_group) == []
     assert len(tracker.getJobIdsForGroup(group)) <= JOB_CEILING
 
+
+def test_in_memory_crawl_job_budget(spark, docs_small, robots_small, monkeypatch):
+    """The two-round crawl of the durable budget test, in memory: every
+    round ends in one observed checkpoint, so no counter job is left (no
+    ``DataFrame.count`` call at all) and the crawl stays under its
+    pinned job ceiling."""
+    sc = spark.sparkContext
+    group = "memory-budget"
+    counts = []
+    orig_count = type(docs_small).count
+
+    def counted(self):
+        counts.append(self)
+        return orig_count(self)
+
+    monkeypatch.setattr(type(docs_small), "count", counted)
+    sc.setJobGroup(group, "in-memory crawl")
+    try:
+        res = crawl(
+            spark, docs_small, CrawlConfig(**CFG, max_rounds=2), robots=robots_small
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(res.stats) == 2
+    assert counts == []
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= MEMORY_JOB_CEILING

@@ -110,3 +110,30 @@ def test_global_seq_bucket_failure_restores_aqe(spark):
     with pytest.raises(AnalysisException):
         with_global_seq(df, ["k"], bucket_expr=F.col("nope"))
     assert spark.conf.get(key) == before
+
+
+def _executed_plan(df) -> str:
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_offset_tables_plan_as_local_relations(spark):
+    """The driver-side offset and prefix-seed tables are inline local
+    relations: over a ``spark.range`` input neither result plan reads a
+    Python-built RDD (``Scan ExistingRDD``), and each shows the
+    ``LocalTableScan`` its broadcast join reads."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(2000).select(
+        (F.col("id") * 7 % 2000).alias("k"), (F.col("id") % 5).alias("c")
+    )
+    results = [
+        with_global_seq(df, ["k"], bucket_expr=F.floor(F.col("k") / 64)),
+        with_global_seq(df, ["k"], num_partitions=4, small_threshold=0),
+        with_global_prefix_sums(df, ["k"], ["c"], num_partitions=4, small_threshold=0),
+    ]
+    for res in results:
+        plan = _executed_plan(res.df)
+        assert "ExistingRDD" not in plan
+        assert "LocalTableScan" in plan
+        res.unpersist()

@@ -17,7 +17,7 @@ import json
 import pytest
 from pyspark.sql import types as T
 
-from eget_spark.plans.tables import RoundTable, round_schema
+from eget_spark.plans.tables import RoundTable, kind_rows, round_schema
 
 _SPANS = T.ArrayType(
     T.StructType(
@@ -99,7 +99,7 @@ def _pending(spark, t):
         [("u1", "h", 1, None, 7)],
         "url string, host string, depth int, parent_url string, seq long",
     )
-    return t.rows(df, "pending")
+    return kind_rows(t.schema, df, "pending")
 
 
 def test_unconfigured_catalog_rejected(spark, tmp_path):
