@@ -33,12 +33,17 @@ Scale notes (the 10^10 story):
   rows by kind (emitted pages, admitted URLs, the next frontier) and
   counts them with one ``Observation`` inside the one job that commits
   them.  Every ``RoundStats`` field is that Observation plus driver
-  arithmetic, and the next round's frontier, seen, order and pages parts
-  are read from the commit.  The modes differ in that job only: with
-  ``table_dir`` set (durable mode) it writes the rows (protocol and
-  layout: plans/tables.py; Iceberg with a catalog); in memory it is one
-  eager localCheckpoint of them, minus the ok page rows, which stay in
-  the round's hits checkpoint
+  arithmetic, and all crawl state is read from the commits: the next
+  frontier (pending rows, which carry retry attempts), the admitted
+  history (the order; ``seen`` is ``prior_seen`` plus its URLs; the
+  per-host and trap histograms count it) and the pages.  Seeds commit as
+  round 0, so a fresh and a resumed crawl load their state the same
+  way, and the history's per-round parts are compacted into one
+  checkpoint past ``SEEN_COMPACT_PARTS``.  The modes differ in that job
+  only: with ``table_dir`` set (durable mode) it writes the rows
+  (protocol and layout: plans/tables.py; Iceberg with a catalog); in
+  memory it is one eager localCheckpoint of them, minus the ok page
+  rows, which stay in the round's hits checkpoint
 """
 
 from __future__ import annotations
@@ -75,6 +80,12 @@ PAGE_COLS = [
 # multi-GB span corpus every round); above it, pre-bucket the corpus on
 # doc_id so only the frontier side shuffles
 BROADCAST_FRONTIER_ROWS = 500_000
+# plan hygiene: the admitted history's per-round parts are compacted into
+# one checkpoint whenever their count exceeds this, keeping the every-round
+# seen anti-join (and the final order union) O(1)-wide instead of
+# O(rounds) (a 10^4-round politeness crawl would otherwise rebuild an
+# ever-wider union each round)
+SEEN_COMPACT_PARTS = 64
 
 
 @dataclass
@@ -124,12 +135,6 @@ class CrawlConfig:
     use_bloom: bool | str = False
     bloom_auto_threshold: int = 1_000_000
     bloom_fpp: float = 0.01
-    # seen-set plan hygiene: the per-round seen parts are compacted into a
-    # single checkpoint whenever their count exceeds this, keeping the
-    # every-round anti-join plan O(1)-wide instead of O(rounds) (a
-    # 10^4-round politeness crawl would otherwise rebuild an ever-wider
-    # union each round)
-    seen_compact_parts: int = 64
     # which approximate seen-set backs the prefilter when use_bloom engages:
     # "bloom" (OR-mergeable bits) or "cuckoo" (fingerprints; supports
     # delete for recrawl/expiry — operators/cuckoo.py). Same correctness
@@ -145,9 +150,8 @@ class CrawlConfig:
     # row emit.  0 = off (reference-parity single attempt; the corpus-
     # as-network model makes misses deterministic, so the default stays
     # off and the mechanism is what a live-network fetcher would use).
-    # Retry attempt counts live in an in-memory per-run ledger — a
-    # resumed crawl restarts in-flight counts (documented, like the
-    # reference's in-process tenacity state).
+    # A retried row carries its attempt count in the committed pending
+    # rows, so a resumed crawl retries exactly as a straight one does.
     max_retries: int = 0
 
     @property
@@ -319,156 +323,125 @@ def crawl(
     else:
         robots_f = robots
 
-    if table_dir and resume:
-        state = _load_state(run)
-    else:
-        state = None
-
-    if state is None and seed_frontier is None and prior_seen is not None:
-        # list seeds + a warm seen set: route through the DataFrame seed
-        # path so fresh (cached) seeds are anti-joined out and the
-        # remaining ones get a compact admission sequence
-        seed_frontier = spark.createDataFrame(
-            [(u, i) for i, u in enumerate(dict.fromkeys(config.seed_urls))],
-            "url string, order long",
-        )
-
-    if state is None and seed_frontier is not None:
-        # S1, distributed: the same admission rules as the list path —
-        # first-occurrence dedup, max_pages + per-host caps in enumeration
-        # order — expressed as windows over the seed DataFrame (the
-        # recrawl path seeds from a 10^8-row expired table, never a list)
-        sf = seed_frontier
-        if "depth" not in sf.columns:
-            sf = sf.withColumn("depth", F.lit(0))
-        if "parent_url" not in sf.columns:
-            sf = sf.withColumn("parent_url", F.lit(None).cast("string"))
-        if "order" not in sf.columns:
-            sf = sf.withColumn("order", F.lit(0).cast("long"))
-        sf = sf.where(F.col("depth") <= config.max_depth)
-        if prior_seen is not None:
-            sf = sf.join(prior_seen.select("url"), "url", "left_anti")
-        w_dup = Window.partitionBy("url").orderBy("order")
-        sf = (
-            sf.withColumn("_rn", F.row_number().over(w_dup))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-            .withColumn("host", host_of(F.col("url")))
-        )
-        if config.max_pages_per_host is not None:
-            w_h = Window.partitionBy("host").orderBy("order", "url")
-            sf = (
-                sf.withColumn("_hrk", F.row_number().over(w_h))
-                .where(F.col("_hrk") <= config.max_pages_per_host)
-                .drop("_hrk")
+    loaded = _load_commit(run) if run is not None and resume else None
+    if loaded is None:
+        sr0 = None  # the seed sequencing's persist, freed after the commit
+        if seed_frontier is None and prior_seen is not None:
+            # list seeds + a warm seen set: route through the DataFrame seed
+            # path so fresh (cached) seeds are anti-joined out and the
+            # remaining ones get a compact admission sequence
+            seed_frontier = spark.createDataFrame(
+                [(u, i) for i, u in enumerate(dict.fromkeys(config.seed_urls))],
+                "url string, order long",
             )
-        sr0 = with_global_seq(
-            sf,
-            ["order", "url"],
-            start=0,
-            num_partitions=_seq_partitions(spark, 1),
-            # monotone in the leading key -> one hash exchange, no
-            # range-sampling pass that would compute the seed pipeline
-            # twice (same trick as the kids sequencing). Callers seeding
-            # 10^8 rows (recrawl) supply a spread-out `order` (prior
-            # seq); a constant default order degrades to one bucket,
-            # which is fine at list-seed sizes.
-            bucket_expr=F.floor(F.col("order") / F.lit(1024)),
-        )
-        frontier = sr0.df.where(F.col("seq") < config.max_pages).select(FRONTIER_COLS)
-        frontier, frontier_count = _commit_seeds(spark, run, schema, frontier, 1)
-        sr0.unpersist()
-        seen_parts = (
-            [prior_seen.select("url")] if prior_seen is not None else []
-        ) + [frontier.select("url")]
-        admitted_total = frontier_count
-        success_total = 0
-        round_no = 0
-        stats = []
-        pages_parts = []
-        order_parts = [frontier.withColumn("round", F.lit(0))]
-    elif state is None:
-        # S1 seed ingestion: add_url(url, 0, None) per seed; duplicate seeds
-        # dedup first-occurrence-wins exactly like add_url's seen check
-        # (queue_manager.py:46-57); caps (global + per-host) apply in
-        # enumeration order like the sequential admit loop
-        from urllib.parse import urlparse as _urlparse
-
-        kept: list[str] = []
-        _hc: dict[str, int] = {}
-        for u in dict.fromkeys(config.seed_urls):
-            if len(kept) >= config.max_pages:
-                break
+        if seed_frontier is not None:
+            # S1, distributed: the same admission rules as the list path —
+            # first-occurrence dedup, max_pages + per-host caps in enumeration
+            # order — expressed as windows over the seed DataFrame (the
+            # recrawl path seeds from a 10^8-row expired table, never a list)
+            sf = seed_frontier
+            if "depth" not in sf.columns:
+                sf = sf.withColumn("depth", F.lit(0))
+            if "parent_url" not in sf.columns:
+                sf = sf.withColumn("parent_url", F.lit(None).cast("string"))
+            if "order" not in sf.columns:
+                sf = sf.withColumn("order", F.lit(0).cast("long"))
+            sf = sf.where(F.col("depth") <= config.max_depth)
+            if prior_seen is not None:
+                sf = sf.join(prior_seen.select("url"), "url", "left_anti")
+            w_dup = Window.partitionBy("url").orderBy("order")
+            sf = (
+                sf.withColumn("_rn", F.row_number().over(w_dup))
+                .where(F.col("_rn") == 1)
+                .drop("_rn")
+                .withColumn("host", host_of(F.col("url")))
+            )
             if config.max_pages_per_host is not None:
-                h = _urlparse(u).netloc
-                if _hc.get(h, 0) >= config.max_pages_per_host:
-                    continue
-                _hc[h] = _hc.get(h, 0) + 1
-            kept.append(u)
-        seeds = [
-            (u, 0, None, i)
-            for i, u in enumerate(kept)
-            if 0 <= config.max_depth
-        ]
-        frontier = spark.createDataFrame(
-            seeds, "url string, depth int, parent_url string, seq long"
-        ).withColumn("host", host_of(F.col("url"))).select(FRONTIER_COLS)
-        frontier, frontier_count = _commit_seeds(
-            spark, run, schema, frontier, len(seeds)
-        )
-        # `seen` is kept as a union of per-round checkpointed parts — no
-        # O(|seen|) re-materialization per round (the Iceberg-append shape)
-        seen_parts: list[DataFrame] = [frontier.select("url")]
-        admitted_total = frontier_count
-        success_total = 0
-        round_no = 0
-        stats: list[RoundStats] = []
-        pages_parts: list[DataFrame] = []
-        order_parts: list[DataFrame] = [frontier.withColumn("round", F.lit(0))]
-    else:
-        (
-            frontier, frontier_count, seen0, admitted_total, success_total,
-            round_no, stats,
-        ) = state
-        seen_parts = [seen0]
-        # returned handles must cover the WHOLE crawl, not just post-resume
-        # rounds — seed them from the tables (round-1 advice fix)
-        pages_parts = [run.read_upto(round_no, "docs").select(PAGE_COLS)]
-        order_parts = [run.read_upto(round_no, "admitted")]
+                w_h = Window.partitionBy("host").orderBy("order", "url")
+                sf = (
+                    sf.withColumn("_hrk", F.row_number().over(w_h))
+                    .where(F.col("_hrk") <= config.max_pages_per_host)
+                    .drop("_hrk")
+                )
+            sr0 = with_global_seq(
+                sf,
+                ["order", "url"],
+                start=0,
+                num_partitions=_seq_partitions(spark, 1),
+                # monotone in the leading key -> one hash exchange, no
+                # range-sampling pass that would compute the seed pipeline
+                # twice (same trick as the kids sequencing). Callers seeding
+                # 10^8 rows (recrawl) supply a spread-out `order` (prior
+                # seq); a constant default order degrades to one bucket,
+                # which is fine at list-seed sizes.
+                bucket_expr=F.floor(F.col("order") / F.lit(1024)),
+            )
+            seeds = sr0.df.where(F.col("seq") < config.max_pages)
+            row_bound = 1
+        else:
+            # S1 seed ingestion: add_url(url, 0, None) per seed; duplicate
+            # seeds dedup first-occurrence-wins exactly like add_url's seen
+            # check (queue_manager.py:46-57); caps (global + per-host) apply
+            # in enumeration order like the sequential admit loop
+            from urllib.parse import urlparse as _urlparse
 
-    # per-host admission counters (max_pages_per_host): a tiny (host, _n)
-    # table, rebuilt from the admitted history on resume.  Seeds are
-    # committed as admitted round 0 (both seed paths above commit round 0
-    # before round 1), so the fresh-run source (`frontier` = seeds) and
-    # the resume source (admitted history) count the SAME rows —
-    # the straight-through and resumed histograms (and the trap histogram
-    # below, which shares hc_src's two sources) are provably identical.
+            kept: list[str] = []
+            _hc: dict[str, int] = {}
+            for u in dict.fromkeys(config.seed_urls):
+                if len(kept) >= config.max_pages:
+                    break
+                if config.max_pages_per_host is not None:
+                    h = _urlparse(u).netloc
+                    if _hc.get(h, 0) >= config.max_pages_per_host:
+                        continue
+                    _hc[h] = _hc.get(h, 0) + 1
+                kept.append(u)
+            rows = [(u, 0, None, i) for i, u in enumerate(kept) if 0 <= config.max_depth]
+            seeds = spark.createDataFrame(
+                rows, "url string, depth int, parent_url string, seq long"
+            ).withColumn("host", host_of(F.col("url")))
+            row_bound = len(rows)
+        loaded = _commit_seeds(
+            spark, run, schema, seeds.select(FRONTIER_COLS), row_bound
+        )
+        if sr0 is not None:
+            sr0.unpersist()
+
+    # the one state loader: fresh and resumed crawls alike take every loop
+    # variable from the committed rounds — their log rows (counters), the
+    # last round's pending rows (frontier, with retry attempts) and the
+    # admitted history (admission order; with ``prior_seen``, the seen set)
+    log, frontier, history, pages_parts = loaded
+    last = log[-1]
+    round_no = last["round"]
+    frontier_count = last["pending"]
+    admitted_total = last["admitted_total"]
+    success_total = last["success_total"]
+    stats = [_round_stats(x, 0.0) for x in log if x["round"] > 0]
+    # per-round parts of the admitted history, compacted past
+    # SEEN_COMPACT_PARTS; `seen` is their url union, no O(|seen|)
+    # re-materialization per round
+    order_parts = [history]
+
+    # per-host admission counters (max_pages_per_host) and the spider-trap
+    # throttle's (host, template, _n) histogram both count the admitted
+    # history; trap hosts are derived from the latter lazily each round —
+    # a tiny aggregate over a checkpointed frame, O(hosts x templates)
     host_counts: DataFrame | None = None
     if config.max_pages_per_host is not None:
-        hc_src = frontier if state is None else run.read_upto(round_no, "admitted")
-        host_counts = _checkpoint(_count_by(hc_src, ["host"]))
-
-    # spider-trap throttle state: running (host, template, _n) histogram of
-    # admitted URLs (rebuilt from admitted history on resume); trap hosts
-    # are derived from it lazily each round — a tiny aggregate over a
-    # checkpointed frame, O(hosts x templates)
+        host_counts = _checkpoint(_count_by(history, ["host"]))
     tmpl_counts: DataFrame | None = None
     if config.auto_trap_threshold is not None:
-        # resume parity (round-4 advice): both seed paths commit the seed
-        # frontier as admitted round 0 (`_commit_seeds` above), so the
-        # resumed histogram source (admitted history) contains the exact
-        # rows the fresh-run source (seed frontier) contributes —
-        # straight-through and resumed crawls flag identically
-        tc_src = frontier if state is None else run.read_upto(round_no, "admitted")
         tmpl_counts = _checkpoint(
             _count_by(
-                tc_src.select("host", url_template(F.col("url")).alias("template")),
+                history.select("host", url_template(F.col("url")).alias("template")),
                 ["host", "template"],
             )
         )
 
     def seen_df() -> DataFrame:
-        return _union_all(seen_parts)
+        prior = [] if prior_seen is None else [prior_seen.select("url")]
+        return _union_all(prior + [p.select("url") for p in order_parts])
 
     def want_bloom(total: int) -> bool:
         if config.use_bloom == "auto":
@@ -496,8 +469,6 @@ def crawl(
         politeness_robots = None
     else:
         politeness_robots = robots_f
-
-    retry_ledger: DataFrame | None = None  # (url, _attempt) for in-flight retries
 
     while frontier_count > 0 and success_total < config.max_pages and round_no < config.max_rounds:
         round_no += 1
@@ -561,7 +532,7 @@ def crawl(
             joined = fetch_now.join(docs, fetch_now["url"] == docs["doc_id"], "left")
             hits = joined.where(F.col("doc_id").isNotNull()).drop("doc_id")
             misses = joined.where(F.col("doc_id").isNull()).select(
-                *[fetch_now[c] for c in FRONTIER_COLS]
+                *[fetch_now[c] for c in KIND_COLS["pending"]]
             )
 
         # non-eager: materializes inside the sequencing job below (one fewer
@@ -575,39 +546,18 @@ def crawl(
                 F.broadcast(hits.select("url")), "url", "left_anti"
             )
 
-        # bounded retries: missed URLs re-enqueue (same frontier row, same
-        # seq) until attempted 1+max_retries times; deferred URLs keep
-        # their old attempt count (they were not attempted this round)
+        # bounded retries: a missed URL re-enqueues (same frontier row,
+        # same seq) with its pending row's attempt count + 1 until it has
+        # been attempted 1+max_retries times; deferred rows keep their
+        # count (they were not attempted this round)
         retry_next = None
         exhausted = misses
         if config.max_retries > 0:
-            m = misses.select(*FRONTIER_COLS)
-            if retry_ledger is not None:
-                m_att = m.join(retry_ledger, "url", "left").withColumn(
-                    "_attempt", F.coalesce(F.col("_attempt"), F.lit(0)) + 1
-                )
-            else:
-                m_att = m.withColumn("_attempt", F.lit(1))
-            m_att = _checkpoint(m_att)
-            retry_next = m_att.where(
-                F.col("_attempt") <= config.max_retries
-            ).select(*FRONTIER_COLS)
-            exhausted = m_att.where(F.col("_attempt") > config.max_retries).select(
-                *FRONTIER_COLS
+            tried = F.coalesce(F.col("attempt"), F.lit(0))
+            retry_next = misses.where(tried < config.max_retries).withColumn(
+                "attempt", tried + 1
             )
-            new_ledger = m_att.select("url", "_attempt")
-            if retry_ledger is not None:
-                # deferred URLs were not attempted: keep their old counts.
-                # Checkpoint only on this branch — it is the only one that
-                # would otherwise chain a semi-join per politeness round
-                new_ledger = _checkpoint(
-                    new_ledger.unionByName(
-                        retry_ledger.join(
-                            deferred.select("url"), "url", "left_semi"
-                        )
-                    )
-                )
-            retry_ledger = new_ledger
+            exhausted = misses.where(tried >= config.max_retries)
         # S6: the round's rows, tagged by kind — emitted pages (fetch hits
         # and exhausted misses), admitted URLs and the next frontier —
         # committed by _commit_round, whose Observation yields every
@@ -620,7 +570,10 @@ def crawl(
         pid = "spark_partition_id()"
         parts = [
             (("docs",), hits, {"status": "'ok'", "partition_id": pid}),
-            (("docs",), exhausted, {"status": "'missing'", "partition_id": pid}),
+            (
+                ("docs",), exhausted,
+                {"status": "'missing'", "partition_id": pid, "attempt": "NULL"},
+            ),
         ]
         n_admitted = 0
         if admitted_total < config.max_pages:
@@ -783,6 +736,10 @@ def crawl(
                     "CAST(NULL AS string) AS markdown", "spans",
                 )
             )
+        if n_admitted > 0:
+            order_parts.append(admitted.withColumn("round", F.lit(round_no)))
+            if len(order_parts) > SEEN_COMPACT_PARTS:
+                order_parts = [_checkpoint(_union_all(order_parts))]
         if bloom is not None and n_admitted > 0:
             # distributed delta: same shape as the running filter, built
             # over the committed admitted set and merged — only shard
@@ -792,10 +749,6 @@ def crawl(
                 bloom.merge(build_filter(admitted, 0, like=bloom))
             else:
                 bloom = None  # saturated: rebuild distributed from seen below
-        if n_admitted > 0:
-            seen_parts.append(admitted.select("url"))
-            if len(seen_parts) > config.seen_compact_parts:
-                seen_parts = [_checkpoint(_union_all(seen_parts))]
         if config.max_pages_per_host is not None and n_admitted > 0:
             host_counts = _add_counts(host_counts, admitted, ["host"])
         if tmpl_counts is not None and n_admitted > 0:
@@ -806,17 +759,7 @@ def crawl(
             )
         if bloom is None and want_bloom(admitted_total):
             bloom = build_filter(seen_df(), bloom_expected(admitted_total))
-
-        if n_admitted > 0:
-            order_parts.append(admitted.withColumn("round", F.lit(round_no)))
-
-        stats.append(
-            RoundStats(
-                round_no, logged["attempted"], logged["success"], logged["failed"],
-                n_admitted, logged["deferred"], admitted_total, success_total,
-                time.monotonic() - t0,
-            )
-        )
+        stats.append(_round_stats(logged, time.monotonic() - t0))
 
     if pages_parts:
         # the union stacks every round's checkpoint partitions (rounds x
@@ -944,40 +887,37 @@ def _commit_seeds(
     schema: StructType,
     seeds: DataFrame,
     row_bound: int,
-) -> tuple[DataFrame, int]:
+):
     """Round 0: commit the admitted seeds as both ``admitted`` and
-    ``pending``; returns the frontier read back from the commit and its
-    size."""
+    ``pending``; returns what :func:`_load_commit` returns, read from
+    this commit."""
     logged, committed = _commit_round(
         spark, run, schema, 0, [(("admitted", "pending"), seeds, {})], row_bound, 0, 0
     )
-    return committed("pending"), logged["pending"]
+    history = committed("admitted").withColumn("round", F.lit(0))
+    return [logged], committed("pending"), history, []
 
 
-def _load_state(run: CrawlRun):
-    """Resume from the latest committed round: its log row (read on the
-    driver) holds the counters, its pending rows are the frontier."""
-    rows = run.log_rows()
-    if not rows:
+def _load_commit(run: CrawlRun):
+    """Resume from the latest committed round: the log rows (read on the
+    driver), its pending rows, the admitted history and the pages
+    emitted so far; None when no round is committed."""
+    log = run.log_rows()
+    if not log:
         return None
-    last = rows[-1]
-    r = last["round"]
-    stats = [
-        RoundStats(
-            x["round"], x["attempted"], x["success"], x["failed"], x["admitted"],
-            x["deferred"], x["admitted_total"], x["success_total"], 0.0,
-        )
-        for x in rows
-        if x["round"] > 0
-    ]
+    r = log[-1]["round"]
     return (
+        log,
         run.read_round(r, "pending"),
-        last["pending"],
-        run.read_upto(r, "admitted").select("url"),
-        last["admitted_total"],
-        last["success_total"],
-        r,
-        stats,
+        run.read_upto(r, "admitted"),
+        [run.read_upto(r, "docs").select(PAGE_COLS)],
+    )
+
+
+def _round_stats(log: dict, duration_sec: float) -> RoundStats:
+    return RoundStats(
+        log["round"], log["attempted"], log["success"], log["failed"], log["admitted"],
+        log["deferred"], log["admitted_total"], log["success_total"], duration_sec,
     )
 
 

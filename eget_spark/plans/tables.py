@@ -7,7 +7,13 @@ kinds, all with the frontier columns (url, host, depth, parent_url, seq):
 - ``docs``: the page rows the round emitted (fetch hits plus exhausted
   misses), with status, markdown, spans and partition_id;
 - ``admitted``: the URLs the round admitted (seen set, admission order);
-- ``pending``: the next round's frontier.
+- ``pending``: the next round's frontier, plus ``attempt``: how often a
+  retried fetch miss has been attempted (NULL, read as 0, on a row that
+  was never fetched).  Rounds written before ``attempt`` existed read
+  it as NULL.
+
+Retry attempts, the seen set and the admission order are all data in
+these rows, so a resumed crawl rebuilds its whole state from the commit.
 
 Each round also has one log row, its ``RoundStats`` counters plus the
 next frontier's size (``pending``).  The log row is the commit marker.
@@ -65,14 +71,14 @@ FRONTIER_COLS = ["url", "host", "depth", "parent_url", "seq"]
 KIND_COLS = {
     "docs": FRONTIER_COLS + ["status", "markdown", "spans", "partition_id"],
     "admitted": FRONTIER_COLS,
-    "pending": FRONTIER_COLS,
+    "pending": FRONTIER_COLS + ["attempt"],
 }
 _LOG = "_log.json"
 
 
 def round_schema(spans_type: T.DataType) -> T.StructType:
-    """Columns of a committed row, ``kind`` aside: admitted and pending
-    rows leave the docs-only columns NULL."""
+    """Columns of a committed row, ``kind`` aside: each kind leaves the
+    columns of the others NULL."""
     return T.StructType(
         [
             T.StructField("url", T.StringType()),
@@ -84,6 +90,7 @@ def round_schema(spans_type: T.DataType) -> T.StructType:
             T.StructField("markdown", T.StringType()),
             T.StructField("spans", spans_type),
             T.StructField("partition_id", T.IntegerType()),
+            T.StructField("attempt", T.IntegerType()),
         ]
     )
 
@@ -230,10 +237,18 @@ class RoundTable:
         if self.catalog:
             t = self.spark.table(f"{self.catalog}.{self.name}")
             committed = t.where(F.col("kind") == "log").select("round")
+            # a column the table predates (``attempt``) reads as NULL, as
+            # it does from parquet
+            typed = {f.name: f.dataType.simpleString() for f in self.schema}
             return (
                 t.where(F.col("kind") == kind)
                 .join(committed, "round", "left_semi")
-                .select(cols)
+                .selectExpr(
+                    *[
+                        c if c in t.columns else f"CAST(NULL AS {typed[c]}) AS {c}"
+                        for c in cols
+                    ]
+                )
             )
         base = f"{self.root}/{self.name}"
         if not self._fs().exists(self._path(base)):

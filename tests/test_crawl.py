@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+import eget_spark.plans.crawl as plan_crawl
 from eget_spark.plans.crawl import CrawlConfig, crawl
 from eget_spark.synth import doc_url
 from tests.oracle import OracleConfig, oracle_crawl, oracle_markdown
@@ -208,6 +209,55 @@ def test_crawl_resume_identical(spark, docs_small, robots_small, tmp_path):
     } == full_pages
 
 
+def test_crawl_resume_keeps_prior_seen(spark, docs_small, robots_small, tmp_path):
+    """A crawl with ``prior_seen`` stopped after round 1 and resumed with
+    the same ``prior_seen`` equals the straight run: the prior URLs stay
+    in ``seen`` and stay out of admission.  They are first linked from
+    pages fetched in round 2, after the resume point."""
+    kw = dict(max_depth=3, max_pages=80)
+    base = crawl(spark, docs_small, CrawlConfig(seed_urls=[SEED], **kw), robots=robots_small)
+    prior_urls = [
+        r["url"] for r in base.order.where("round = 2").orderBy("seq").limit(5).collect()
+    ]
+    assert prior_urls
+    prior = spark.createDataFrame([(u,) for u in prior_urls], "url string")
+
+    def outcome(res):
+        return {
+            "order": sorted(
+                (r["seq"], r["url"], r["depth"], r["parent_url"])
+                for r in res.order.collect()
+            ),
+            "seen": sorted(r["url"] for r in res.seen.collect()),
+            "pages": sorted(
+                (r["url"], r["status"], r["round"]) for r in res.pages.collect()
+            ),
+        }
+
+    straight = outcome(
+        crawl(
+            spark, docs_small, CrawlConfig(seed_urls=[SEED], **kw),
+            robots=robots_small, prior_seen=prior,
+        )
+    )
+    assert set(prior_urls) <= set(straight["seen"])
+    assert not set(prior_urls) & {u for _, u, _, _ in straight["order"]}
+
+    d = str(tmp_path / "run")
+    partial = crawl(
+        spark, docs_small, CrawlConfig(seed_urls=[SEED], max_rounds=1, **kw),
+        robots=robots_small, table_dir=d, prior_seen=prior,
+    )
+    assert len(partial.stats) == 1
+    resumed = crawl(
+        spark, docs_small, CrawlConfig(seed_urls=[SEED], **kw),
+        robots=robots_small, table_dir=d, resume=True, prior_seen=prior,
+    )
+    got = outcome(resumed)
+    for key in straight:
+        assert got[key] == straight[key], key
+
+
 def test_crawl_auto_bloom(spark, docs_small, corpus_small, robots_small, robots_dict):
     """use_bloom='auto': exact-only below the threshold, bloom engaged (and
     results still oracle-identical) once the seen set crosses it."""
@@ -282,12 +332,15 @@ def test_crawl_host_cap_matches_oracle(spark, docs_small, corpus_small, robots_s
     assert 10 in per_host.values()
 
 
-def test_crawl_seen_compaction_identical(spark, docs_small, corpus_small, robots_small, robots_dict):
+def test_crawl_seen_compaction_identical(
+    spark, docs_small, corpus_small, robots_small, robots_dict, monkeypatch
+):
     """seen-part compaction (plan-hygiene for long crawls) must not change
     any result: force it every 2 rounds on a multi-round politeness crawl."""
+    monkeypatch.setattr(plan_crawl, "SEEN_COMPACT_PARTS", 2)
     seed = doc_url(2, 0)
     kw = dict(max_depth=3, max_pages=40, round_window=5.0)
-    cfg = CrawlConfig(seed_urls=[seed], seen_compact_parts=2, **kw)
+    cfg = CrawlConfig(seed_urls=[seed], **kw)
     res = crawl(spark, docs_small, cfg, robots=robots_small)
     ores = oracle_crawl(
         corpus_small, OracleConfig(seed_urls=[seed], **kw), robots=robots_dict
